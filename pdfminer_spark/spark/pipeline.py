@@ -3,6 +3,7 @@
 Stage plan (SURVEY.md §3.1 "Spark lifecycle"):
 
   scan -> salted repartition on conv_id  [shuffle #1, skew defuse]
+       -> try_to_binary(text, 'base64')  [PDF payloads, stage-parallel]
        -> mapInPandas(extract)           [the only JVM<->Python crossing]
        -> window over (conv_id, turn_idx) for stable turn ordering
           (applied by assemble_conversations / validate joins)
@@ -62,8 +63,9 @@ def extract_one(text: str, tool: str, page_numbers=None,
     [, boxes]). ``boxes`` rows are (box_id, page, x0, y0, x1, y1, wmode,
     text) in reading order — the span unit of the XML goldens.
 
-    ``pdf_bytes``: pre-decoded payload (the pipeline unbase64s JVM-side
-    before the shuffle — 25% less shuffle/Arrow traffic than b64 text).
+    ``pdf_bytes``: pre-decoded payload (the pipeline base64-decodes
+    JVM-side after the shuffle, so the Arrow crossing carries binary,
+    25% smaller than base64 text); ``None`` decodes ``text`` here.
 
     Importable without pyspark (reused by tests and the DuckDB oracle)."""
     from pdfminer_spark.html.boilerplate import extract_main_text
@@ -164,6 +166,22 @@ def salted_repartition(df: DataFrame, num_partitions: int | None = None,
     return salted.drop("_salt")
 
 
+def _extraction_input(df: DataFrame, num_partitions: int | None = None,
+                      salt: int = 16, repartition: bool = True) -> DataFrame:
+    """The salted shuffle, then PDF payloads base64-decoded JVM-side into
+    ``_pdf`` (``text`` blanked) at the stage's parallelism, not the
+    scan's: the shuffle carries text, the Arrow crossing binary. Payloads
+    the decoder rejects get NULL, not a task failure under ANSI, and keep
+    their text for ``extract_one``'s Python decode (status column)."""
+    src = salted_repartition(df, num_partitions, salt) if repartition else df
+    pdf = F.try_to_binary(F.col("text"), F.lit("base64"))
+    return src.withColumn(
+        "_pdf", F.when(F.col("tool") == "pdf", pdf)
+    ).withColumn(
+        "text", F.when(F.col("_pdf").isNotNull(), F.lit("")).otherwise(
+            F.col("text")))
+
+
 def extract_transcripts(df: DataFrame, page_numbers=None,
                         detect_vertical: bool = True,
                         num_partitions: int | None = None,
@@ -176,21 +194,9 @@ def extract_transcripts(df: DataFrame, page_numbers=None,
     ``fmt`` selects the rendered text column: 'text' | 'xml' | 'html'
     (the reference's -t output modes, golden-identical).
 
-    PDF payloads are unbase64'd JVM-side *before* the shuffle so the salt
-    repartition and the Arrow crossing carry binary (25% smaller than
-    base64 text)."""
-    # only well-formed base64 is decoded JVM-side (ANSI mode would fail
-    # the task on garbage); malformed payloads keep their text and fail
-    # soft inside the UDF (status column)
-    decodable = (F.col("tool") == "pdf") & F.col("text").rlike(
-        "^[A-Za-z0-9+/\\s]*={0,2}$")
-    prepared = df.withColumn(
-        "_pdf", F.when(decodable, F.unbase64(F.col("text")))
-    ).withColumn(
-        "text", F.when(decodable, F.lit("")).otherwise(F.col("text"))
-    )
-    src = (salted_repartition(prepared, num_partitions, salt)
-           if repartition else prepared)
+    PDF payloads are base64-decoded JVM-side *after* the salted shuffle,
+    inside the extraction stage's tasks (``_extraction_input``)."""
+    src = _extraction_input(df, num_partitions, salt, repartition)
     return src.mapInPandas(
         _extract_map_batches(page_numbers, detect_vertical, with_boxes, fmt),
         schema=EXTRACTED_WITH_BOXES_SCHEMA if with_boxes else EXTRACTED_SCHEMA,

@@ -2,11 +2,12 @@
 corpus (r6 verdict #5 — the dedup generators have 10x/100x capacity
 points; this gives extraction one, with the memory evidence).
 
-For each size the REAL pipeline runs end to end (JVM-side unbase64 ->
-salted repartition -> mapInPandas extract -> turn-order window) on an
-executor-side-generated corpus (build_transcripts_scaled: same payload
-marginals and 20% giant-conversation skew as the bench), and the
-mapInPandas stage is instrumented per PARTITION:
+For each size the REAL pipeline runs end to end (salted repartition of
+base64 text -> JVM-side decode -> mapInPandas extract over binary ->
+turn-order window) on an executor-side-generated corpus
+(build_transcripts_scaled: same payload marginals and 20%
+giant-conversation skew as the bench), and the mapInPandas stage is
+instrumented per PARTITION:
 
 * rows / Arrow batches / max batch rows (evidence the configured
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` bound holds);
@@ -15,9 +16,9 @@ mapInPandas stage is instrumented per PARTITION:
   across every partition it has run: a conservative UPPER bound on any
   single partition's footprint.
 
-The wrapper drives the production batch function (_extract_map_batches)
-unmodified; only the output schema gains the telemetry columns, so the
-measured path is the shipped path.
+The wrapper drives the production stage input (_extraction_input) and
+batch function (_extract_map_batches) unmodified; only the output schema
+gains the telemetry columns, so the measured path is the shipped path.
 
 Output: one JSON line per size plus a final summary line with the
 1x->10x throughput ratio. Flat t/s and bounded worker RSS at 10x is the
@@ -72,12 +73,10 @@ def _telemetry_fn(inner):
 
 
 def run(spark, n_turns: int) -> dict:
-    from pyspark.sql import functions as F
-
     from pdfminer_spark.spark.fixtures import build_transcripts_scaled
     from pdfminer_spark.spark.pipeline import (_extract_map_batches,
+                                               _extraction_input,
                                                extract_transcripts,
-                                               salted_repartition,
                                                with_turn_order)
 
     df = build_transcripts_scaled(spark, n_turns=n_turns, giant_frac=0.2,
@@ -91,13 +90,7 @@ def run(spark, n_turns: int) -> dict:
 
     # telemetry pass: same input, same salt plan, same batch fn — the
     # schema swap is the only difference
-    decodable = (F.col("tool") == "pdf") & F.col("text").rlike(
-        "^[A-Za-z0-9+/\\s]*={0,2}$")
-    prepared = df.withColumn(
-        "_pdf", F.when(decodable, F.unbase64(F.col("text")))
-    ).withColumn(
-        "text", F.when(decodable, F.lit("")).otherwise(F.col("text")))
-    tele = (salted_repartition(prepared, None, 4)
+    tele = (_extraction_input(df, salt=4)
             .mapInPandas(
                 _telemetry_fn(_extract_map_batches([0], True)),
                 schema=("pid int, rows long, batches long, "
