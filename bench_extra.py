@@ -21,24 +21,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bench import HEADLINE  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 REPS = int(os.environ.get("SPARK_GRAFT_REPS", "2"))
 PLAN_DIR = os.environ.get("SPARK_GRAFT_PLANS", "")
-
-HEADLINE = [
-    "pricing_summary", "revenue_by_nation", "interval_self_join",
-    "turn_ordering_window", "dedup_exact", "dedup_minhash",
-    "dedup_minhash_pairs", "simhash_pairs", "curate_near_dups",
-    "token_count", "quality_score", "ann_cosine_topk",
-    "embedding_near_dups_fast", "ann_lsh_pairs", "ann_ivf_topk",
-    "media_features", "layout_boxes", "extract_documents",
-    "asof_join", "sessionize", "tfidf_keywords", "normalize_text",
-    "embedding_quantize", "curate_pdf_corpus", "substring_dup_pairs",
-    "pagerank", "bm25_scores", "warc_extract",
-    "payload_decompress", "media_decode_tiff", "image_dhash",
-    "cues_to_turns", "jsonl_extract",
-]
 
 
 def main() -> None:

@@ -1,34 +1,39 @@
 """Training-data text operators over the ``documents`` table.
 
 Large-scale pipeline primitives (dedup, quality, language-ID, token
-counting, fingerprinting), each built from JVM-side Spark SQL functions —
-no Python UDFs in any of these paths — with DuckDB oracle SQL.
+counting, fingerprinting), each with DuckDB oracle SQL. Tokenizing,
+joins, shuffles and aggregations are JVM-side Spark SQL; the per-token
+and per-gram work of the hash and count operators (MinHash, SimHash,
+n-gram Jaccard, repetition, tf-idf, boilerplate shingles, substring
+windows) runs in Python, in the one Arrow-batched ``mapInPandas`` stage
+of the token-hash kernel below (``_map_docs``).
 
 Cross-engine determinism rule: any hash used in a comparison is md5 (hex
 string in both engines); numeric derivations are rounded on both sides;
 hex→int parsing is STRPOS arithmetic in SQL / ``conv`` in Spark.
 
-MinHash construction (round-2, replaces the 4-slice md5 variant): one md5
-per shingle yields two 32-bit values (h1, h2); the 64 permutations are
-``(h1 + j*h2) mod P`` (Kirsch–Mitzenhauer double hashing, P prime >
-2^32) — integer math both engines agree on exactly, and the per-shingle
-hashing cost stays one md5 no matter how many permutations. Banding is
-b=16 bands × r=4 rows: P(candidate) = 1-(1-J^4)^16 (J=0.8 → 0.9998,
-J=0.5 → 0.64, J=0.2 → 0.025) — the standard near-dup operating curve.
+MinHash construction: one md5 per shingle yields two 32-bit values
+(h1, h2); the 64 permutations are ``(h1 + j*h2) mod P``
+(Kirsch–Mitzenmacher double hashing, P prime > 2^32) — integer math
+both engines agree on exactly, and the per-shingle hashing cost stays
+one md5 no matter how many permutations. Banding is b=16 bands × r=4
+rows: P(candidate) = 1-(1-J^4)^16 (J=0.8 → 0.9998, J=0.5 → 0.64,
+J=0.2 → 0.025) — the standard near-dup operating curve.
 
-Short-document rule (ANSI-safe): docs with fewer than 3 tokens produce
-no 3-gram shingles and drop out of shingle-based outputs; the lookahead
-terms are only evaluated under a ``size(words) >= 3`` guard so ANSI mode
-never sees an out-of-bounds index (pyspark 4 defaults ANSI on). The
-DuckDB oracles mirror the rule with ``WHERE LEN(w) >= 3``.
+Short-document rule: docs with fewer than 3 tokens produce no 3-gram
+shingles and drop out of shingle-based outputs. The DuckDB oracles
+mirror the rule with ``WHERE LEN(w) >= 3``.
 """
 from __future__ import annotations
 
+import hashlib
 import itertools
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from ..spark.curate import with_quality_features
 
 
 def _docs(spark: SparkSession, sf_dir: str,
@@ -66,6 +71,82 @@ def _hex2long(col, start: int):
     return F.conv(F.substring(col, start, 8), 16, 10).cast("long")
 
 
+# -- token-hash kernel ---------------------------------------------------------
+
+def _split_words():
+    """The token rule of every text operator: ``lower(text)`` split on
+    ``[^a-z0-9]+`` by the JVM, the oracles' ``STRING_SPLIT_REGEX``. A
+    leading or trailing separator (or an empty text) leaves an empty
+    first or last token."""
+    return F.split(F.lower(F.col("text")), "[^a-z0-9]+")
+
+
+def _grams(tokens, k: int) -> list:
+    """Stride-1 k-token windows, space-joined; fewer than k tokens give
+    none. On non-null strings ``" ".join`` equals Spark's
+    ``concat_ws(" ", ...)`` and the oracles' ``||``/``ARRAY_TO_STRING``,
+    so a gram is the same string in every engine."""
+    return [" ".join(tokens[i:i + k]) for i in range(len(tokens) - k + 1)]
+
+
+def _md5_64(strings) -> np.ndarray:
+    """int64 of the first 8 bytes (big-endian) of md5(utf-8) per string:
+    hex digits 1-16 of the engines' ``md5`` hex string, so
+
+    * ``v >> 32 & 0xffffffff`` and ``v & 0xffffffff`` are the 32-bit
+      halves ``conv(substring(md5, 1|9, 8), 16, 10)`` (MinHash h1, h2);
+    * bit ``m`` of hex digit ``k`` (0-based) is ``v >> (60 - 4k + m) & 1``
+      (SimHash);
+    * ``v`` itself is a gram key whose equality differs from the full
+      digest's only on a 64-bit collision between distinct strings
+      (~1e-7 among 4M grams), the same argument the md5 hex string
+      already makes at 128 bits. Keys feed only equality, never an
+      output value."""
+    md5 = hashlib.md5
+    digests = b"".join(md5(s.encode("utf-8")).digest() for s in strings)
+    return np.frombuffer(digests, dtype=">i8")[::2].astype(np.int64)
+
+
+_NP_DTYPE = {"long": np.int64, "int": np.int32}
+
+
+def _map_docs(d: DataFrame, per_doc, ddl: str,
+              keep_empty: bool = False) -> DataFrame:
+    """The text operators' one Python batch loop. ``d``'s ``text`` is
+    tokenized by ``_split_words`` on the JVM; each Arrow batch is walked
+    doc by doc, and ``per_doc(doc_id, tokens)`` returns the doc's output
+    rows column-wise: one sequence per ``ddl`` column, all of one length
+    (an empty tuple drops the doc). Empty tokens are removed first
+    unless ``keep_empty`` — MinHash's oracle shingles the raw split.
+
+    Output stays columnar end to end: per-row tuples and their
+    transposition cost more than the hashing for the many-row
+    operators. Columns get the dtypes ``ddl`` declares, so a batch that
+    emits nothing still yields typed columns (an empty untyped column is
+    float64, which Arrow cannot cast to ``array<long>`` or ``string``);
+    numeric columns go through numpy, several times faster than an
+    int64 ``pd.Series`` from Python ints."""
+    import pandas as pd
+
+    fields = [f.split() for f in ddl.split(",")]
+
+    def fn(batches):
+        for pdf in batches:
+            cols = [[] for _ in fields]
+            for (doc_id, w) in zip(pdf["doc_id"], pdf["w"]):
+                out = per_doc(
+                    doc_id, list(w) if keep_empty else [t for t in w if t])
+                for (c, v) in zip(cols, out):
+                    c.extend(v)
+            yield pd.DataFrame({
+                name: (np.array(c, dtype=_NP_DTYPE[t]) if t in _NP_DTYPE
+                       else pd.Series(c, dtype="object"))
+                for ((name, t), c) in zip(fields, cols)})
+
+    return (d.select("doc_id", _split_words().alias("w"))
+            .mapInPandas(fn, ddl))
+
+
 # -- exact dedup ---------------------------------------------------------------
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -90,93 +171,35 @@ _ROWS_PER_BAND = 4
 _MH_PRIME = 4294967311  # smallest prime > 2^32
 
 
-def _shingles_expr(words, keep_empty_tokens: bool):
-    """Word-3-gram shingle array, guarded for <3-token docs (empty array:
-    explode() then drops the doc). Lookahead indices are only reachable
-    when size >= 3, so ANSI mode cannot throw INVALID_ARRAY_INDEX."""
-    if keep_empty_tokens:
-        idx = F.sequence(F.lit(0), F.size(words) - 3)
-        built = F.transform(
-            idx, lambda i: F.concat_ws(" ", words[i], words[i + 1],
-                                       words[i + 2]))
-    else:
-        idx = F.sequence(F.lit(1), F.size(words) - 2)
-        built = F.transform(
-            idx, lambda i: F.concat_ws(" ", F.element_at(words, i),
-                                       F.element_at(words, i + 1),
-                                       F.element_at(words, i + 2)))
-    empty = F.array().cast(T.ArrayType(T.StringType()))
-    return F.when(F.size(words) >= 3, built).otherwise(empty)
-
-
 def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-permutation MinHash signature per document over word-3-gram
     shingles (double-hashing construction, see module docstring).
 
-    Scale: explode(shingles) is the heavy stage — the shuffle carries
-    (doc_id, h1, h2) longs only; the 64 per-permutation mins aggregate
-    map-side (partial min), so the reduce side sees one row per doc per
-    partition."""
+    Scale: shingling, hashing and the 64 per-permutation mins run per
+    doc inside one batch stage — no shuffle beyond the scan's spread."""
     return minhash_sigs_frame(_docs(spark, sf_dir, parallel=True))
 
 
 def minhash_sigs_frame(d: DataFrame) -> DataFrame:
-    """Frame-level MinHash signatures over any (doc_id, text) frame —
-    split out (r5) so composed pipelines (curate_pdf_corpus) reuse the
-    exact signature construction the oracles pin.
-
-    r8 shape (guide §4.2, the ``_lsh_sigs`` precedent): tokenization
-    stays JVM-side (ONE ``split`` — cross-engine semantics pinned), and
-    the per-shingle work (3-gram join, md5, the 64 double-hash
-    permutations, the mins) moves into one Arrow-batched mapInPandas
-    with hashlib + a vectorized numpy (shingles x perms) min. The r7
-    plan's interpreted per-element expression tree (Generate -> md5 ->
-    conv -> 64-column projection -> 64-min hash aggregate) measured
-    4.6 s at sf1.0 with the shingle-building ``transform`` alone at
-    4.2 s; this path is 1.5 s, bit-equal on every signature (A/B'd
-    exact at sf0.1 — ``" ".join`` == concat_ws(" ", ...) on non-null
-    strings, ``int(hexdigest[k:k+8], 16)`` == conv(substring(md5)), and
-    int64 ``(h1 + j*h2) mod P`` cannot overflow: h1, h2 < 2^32, j < 64).
-    The ``size(words) >= 3`` pre-filter replicates explode()'s
-    empty-shingle-array row drop."""
-    import numpy as np
-    import pandas as pd
-
-    # no WHERE guard: size(words) >= 3 would evaluate the split a
-    # second time per row — short docs are skipped inside the batch fn
-    # instead (same rows dropped as explode()'s empty-array behavior)
-    words = F.split(F.lower(F.col("text")), "[^a-z0-9]+")
-    base = d.select("doc_id", words.alias("w"))
+    """Frame-level MinHash signatures over any (doc_id, text) frame, so
+    composed pipelines (curate_pdf_corpus) reuse the exact signature
+    construction the oracles pin. Shingles keep empty tokens, as the
+    oracle does; a doc with no shingle emits no row (explode()'s
+    empty-array drop). ``(h1 + j*h2) mod P`` cannot overflow int64:
+    h1, h2 < 2^32 and j < 64."""
     perm_j = np.arange(_N_PERMS, dtype=np.int64)
     sig_ddl = "doc_id long, " + ", ".join(
         "sig%d long" % j for j in range(_N_PERMS))
 
-    def fn(batches):
-        import hashlib
+    def sig(doc_id, toks):
+        v = _md5_64(_grams(toks, 3))
+        if not len(v):
+            return ()
+        (h1, h2) = ((v >> 32) & 0xFFFFFFFF, v & 0xFFFFFFFF)
+        mins = ((h1[:, None] + perm_j * h2[:, None]) % _MH_PRIME).min(axis=0)
+        return ([doc_id], *mins[:, None].tolist())
 
-        md5 = hashlib.md5
-        for pdf in batches:
-            ids, sigs = [], []
-            for (doc_id, w) in zip(pdf["doc_id"], pdf["w"]):
-                wl = list(w)
-                if len(wl) < 3:
-                    continue
-                hs = [md5((" ".join(wl[i:i + 3])).encode("utf-8")).hexdigest()
-                      for i in range(len(wl) - 2)]
-                h1 = np.array([int(h[:8], 16) for h in hs], dtype=np.int64)
-                h2 = np.array([int(h[8:16], 16) for h in hs], dtype=np.int64)
-                sig = ((h1[:, None] + perm_j[None, :] * h2[:, None])
-                       % _MH_PRIME).min(axis=0)
-                ids.append(int(doc_id))
-                sigs.append(sig)
-            mat = (np.stack(sigs) if sigs
-                   else np.zeros((0, _N_PERMS), dtype=np.int64))
-            cols = {"doc_id": pd.Series(ids, dtype="int64")}
-            for j in range(_N_PERMS):
-                cols["sig%d" % j] = mat[:, j]
-            yield pd.DataFrame(cols)
-
-    return base.mapInPandas(fn, sig_ddl)
+    return _map_docs(d, sig, sig_ddl, keep_empty=True)
 
 
 def _band_expr(j: int):
@@ -471,8 +494,7 @@ def curate_near_dups_best(spark: SparkSession, sf_dir: str,
              .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")))
     rep = _cc_min_label(edges)
     d = _docs(spark, sf_dir)
-    n_words = F.size(F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda w: w != ""))
+    n_words = F.size(F.filter(_split_words(), lambda w: w != ""))
     scored = d.select("doc_id", n_words.alias("n_words"),
                       F.md5("text").alias("content_hash"))
     graph = rep.join(scored.withColumnRenamed("doc_id", "id"), "id")
@@ -563,6 +585,9 @@ def dedup_incremental(spark: SparkSession, sf_dir: str,
 # -- SimHash ---------------------------------------------------------------------
 
 _SIMHASH_BITS = 64
+# shift of bit j (bit j%4 of hex digit j//4) in a _md5_64 value
+_SIM_SHIFTS = np.array([60 - 4 * (j // 4) + j % 4
+                        for j in range(_SIMHASH_BITS)])
 
 
 def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -571,62 +596,19 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     where b_j is bit (j%4) of hex digit (j//4) of md5(token) — cross-
     engine stable (md5 + STRPOS arithmetic, no engine-specific hash).
 
-    r8 shape (guide §4.2, the ``_lsh_sigs`` / minhash_sigs_frame
-    precedent): tokenize + distinct stay JVM-side (``split`` semantics
-    pinned cross-engine), and the per-token md5 -> 64 sign-bit sums ->
-    hex assembly run in ONE Arrow-batched mapInPandas with hashlib +
-    vectorized numpy bit extraction — the r7 explode -> 64-bit-column
-    projection -> 64-column hash aggregate (interpreted per-element,
-    plus a full exchange) disappears. Bit-equal by construction: digit
-    k of the hexdigest is nibble k of the digest bytes (high nibble
-    first), bit_j = (digit[j div 4] >> (j mod 4)) & 1 exactly as
-    ``floor(nib / 2^(j%4)) %% 2``, and the per-doc sum of ±1 ints is
-    order-independent. A/B'd exact at sf0.1."""
-    import numpy as np
-    import pandas as pd
+    The row guard is a cheap rlike: a doc has a non-empty token iff its
+    text contains an alphanumeric character, the oracle's
+    ``size(distinct(filter(split))) > 0`` without a second split."""
+    base = _docs(spark, sf_dir, parallel=True).where(
+        F.col("text").rlike("[a-zA-Z0-9]"))
 
-    d = _docs(spark, sf_dir, parallel=True)
-    # only the SPLIT stays JVM-side (pinned semantics); the empty-token
-    # filter and the distinct run as a Python set — both were
-    # interpreted per-element HOFs and together cost more than the md5
-    # stage itself (tokenize-only noop 0.99 s vs full 1.35 s at sf1.0).
-    # The row-drop guard becomes a cheap rlike: a doc has a non-empty
-    # token iff its text contains an alphanumeric character (split is
-    # on [^a-z0-9]+ over lower()), which is exactly the old
-    # ``size(distinct(filter(split))) > 0`` without evaluating the
-    # expensive expression twice (once for WHERE, once for the select).
-    base = (d.where(F.col("text").rlike("[a-zA-Z0-9]"))
-            .select("doc_id",
-                    F.split(F.lower(F.col("text")), "[^a-z0-9]+")
-                    .alias("t")))
-    shifts = np.arange(4, dtype=np.uint8)
+    def fp(doc_id, toks):
+        bits = (_md5_64(set(toks))[:, None] >> _SIM_SHIFTS) & 1
+        s = (bits * 2 - 1).sum(axis=0)
+        nibs = ((s.reshape(16, 4) > 0) << np.arange(4)).sum(axis=1)
+        return [doc_id], ["".join(_HEX[v] for v in nibs)]
 
-    def fn(batches):
-        import hashlib
-
-        md5 = hashlib.md5
-        for pdf in batches:
-            ids, fps = [], []
-            for (doc_id, warr) in zip(pdf["doc_id"], pdf["t"]):
-                tset = set(warr)
-                tset.discard("")
-                digests = b"".join(
-                    md5(t.encode("utf-8")).digest() for t in tset)
-                dm = np.frombuffer(digests, dtype=np.uint8).reshape(-1, 16)
-                # hex digit 2k = high nibble of byte k, 2k+1 = low nibble
-                digits = np.empty((dm.shape[0], 16), dtype=np.uint8)
-                digits[:, 0::2] = dm[:, :8] >> 4
-                digits[:, 1::2] = dm[:, :8] & 15
-                bits = (digits[:, :, None] >> shifts[None, None, :]) & 1
-                s = (bits.reshape(-1, 64).astype(np.int64) * 2 - 1).sum(axis=0)
-                nibs = ((s.reshape(16, 4) > 0).astype(np.int64)
-                        << np.arange(4, dtype=np.int64)[None, :]).sum(axis=1)
-                ids.append(int(doc_id))
-                fps.append("".join(_HEX[v] for v in nibs))
-            yield pd.DataFrame({"doc_id": pd.Series(ids, dtype="int64"),
-                                "simhash": pd.Series(fps, dtype="object")})
-
-    return base.mapInPandas(fn, "doc_id long, simhash string")
+    return _map_docs(base, fp, "doc_id long, simhash string")
 
 
 # Manku-style (WWW'07 "Detecting Near-Duplicates for Web Crawling")
@@ -661,7 +643,6 @@ def _simhash_keyed(sims: DataFrame) -> DataFrame:
     caller can recover the rep frame from the combo-0 rows instead of
     materializing the groupBy separately; join sides project it away
     before any exchange."""
-    import numpy as np
     import pandas as pd
 
     def _key_batches(batches):
@@ -812,52 +793,18 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     most 5x, and true near-dups by far less.
 
     The brute-force baseline the MinHash/LSH path approximates; at corpus
-    scale only the LSH candidates are compared.
+    scale only the LSH candidates are compared. Shingle sets travel as
+    ``_md5_64`` keys (8 bytes per shingle, compared as longs by
+    array_intersect); the frame is materialized once for both join
+    sides."""
 
-    r8: distinct shingles are built + md5-hashed to signed longs in one
-    Arrow-batched mapInPandas (the §B/§E pattern of OPTIMIZATION_r08) —
-    the interpreted shingle transform disappears, the bucket self-join
-    carries array<long> instead of array<string> (8 bytes per shingle
-    vs the full 3-gram text), and array_intersect compares longs. The
-    shingle values only ever feed set intersection, never the output,
-    so the 64-bit truncation argument of substring_dup_pairs applies
-    verbatim (intersection counts shift only on a 64-bit collision
-    between distinct shingles). The frame is also materialized once —
-    both join sides previously re-evaluated the shingle build."""
-    import numpy as np
-    import pandas as pd
+    def shingles(doc_id, toks):
+        sh = np.unique(_md5_64(_grams(toks, 3))).tolist()
+        return ([doc_id], [sh], [len(sh)]) if sh else ()
 
-    d = _docs(spark, sf_dir, parallel=True)
-
-    def fn(batches):
-        import hashlib
-
-        md5 = hashlib.md5
-        for pdf in batches:
-            ids, shs, ns = [], [], []
-            for (doc_id, w) in zip(pdf["doc_id"], pdf["w"]):
-                wl = [x for x in w if x]
-                hs = {md5((" ".join(wl[i:i + 3])).encode("utf-8"))
-                      .digest()[:8] for i in range(len(wl) - 2)}
-                if not hs:
-                    continue
-                ids.append(int(doc_id))
-                shs.append([int.from_bytes(h, "big", signed=True)
-                            for h in hs])
-                ns.append(len(hs))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
-                # explicit object dtype: an all-skipped batch would
-                # otherwise yield an empty float64 column, which Arrow
-                # cannot convert to array<long>
-                "sh": pd.Series(shs, dtype="object"),
-                "n_sh": pd.Series(ns, dtype="int32")})
-
-    base = (d.select("doc_id",
-                     F.split(F.lower(F.col("text")), "[^a-z0-9]+")
-                     .alias("w"))
-            .mapInPandas(fn, "doc_id long, sh array<long>, n_sh int")
-            .localCheckpoint(eager=True))
+    base = _map_docs(_docs(spark, sf_dir, parallel=True), shingles,
+                     "doc_id long, sh array<long>, n_sh int"
+                     ).localCheckpoint(eager=True)
     bucket = F.floor(F.col("n_sh") / 16)
     a = base.select(
         F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"),
@@ -882,8 +829,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-insensitive content fingerprint: md5 over the sorted distinct
     token set (rolling-hash analog; robust to whitespace reflow)."""
     d = _docs(spark, sf_dir)
-    tokens = F.array_sort(F.array_distinct(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+")))
+    tokens = F.array_sort(F.array_distinct(_split_words()))
     return d.select(
         "doc_id",
         F.md5(F.array_join(tokens, " ")).alias("fingerprint"),
@@ -910,32 +856,19 @@ def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- quality scoring -----------------------------------------------------------------
 
-_STOPWORDS = ["the", "and", "of", "to", "a", "in", "is", "it", "that", "for"]
-
-
 def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic quality features: length, punctuation ratio, stopword
-    ratio, mean word length (the Gopher/C4-style filters)."""
-    d = _docs(spark, sf_dir)
-    n_chars = F.length("text")
-    words = F.split(F.lower(F.col("text")), "[^a-z0-9']+")
-    words_clean = F.filter(words, lambda w: w != "")
-    n_words = F.size(words_clean)
-    n_punct = F.length("text") - F.length(
-        F.regexp_replace("text", "[.,!?;:]", ""))
-    n_stop = F.size(F.filter(words_clean, lambda w: w.isin(*_STOPWORDS)))
+    ratio (``with_quality_features``, the curation tail's gates) plus
+    mean word length (the Gopher/C4-style filters). Words are the
+    maximal ``[a-z0-9']`` runs of ``lower(text)``, so their total length
+    is the count of those characters."""
+    n_word_chars = F.length(F.regexp_replace(
+        F.lower(F.col("text")), "[^a-z0-9']+", ""))
     mean_wlen = F.round(
-        F.aggregate(words_clean, F.lit(0).cast("double"),
-                    lambda acc, w: acc + F.length(w)) /
-        F.greatest(n_words, F.lit(1)), 4)
-    return d.select(
-        "doc_id",
-        n_chars.alias("n_chars"),
-        n_words.alias("n_words"),
-        F.round(n_punct / F.greatest(n_chars, F.lit(1)), 6).alias("punct_ratio"),
-        F.round(n_stop / F.greatest(n_words, F.lit(1)), 6).alias("stop_ratio"),
-        mean_wlen.alias("mean_word_len"),
-    )
+        n_word_chars / F.greatest(F.col("n_words"), F.lit(1)), 4)
+    return with_quality_features(_docs(spark, sf_dir)).select(
+        "doc_id", "n_chars", "n_words", "punct_ratio", "stop_ratio",
+        mean_wlen.alias("mean_word_len"))
 
 
 # -- repetition signals (Gopher-style quality filter) -------------------------------
@@ -943,45 +876,18 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 def repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-document repetition signals (the Gopher repetition
     filters): distinct-token ratio and the fraction of the document
-    covered by its most frequent word-2-gram. Both are pure JVM
-    array/aggregate expressions over one explode — no self-join.
+    covered by its most frequent word-2-gram. Every signal is doc-local:
+    the batch stage counts words, distinct words and the top bigram
+    multiplicity (the gram itself never reaches the output, so ties are
+    unobservable); the ratios are JVM expressions. No exchange."""
+    from collections import Counter
 
-    r8 shape: every signal is doc-LOCAL, so the r7 2-gram explode ->
-    corpus-wide (doc_id, gram) aggregation -> per-doc window was three
-    operators (and an exchange) computing what one per-row pass can:
-    the max bigram multiplicity per doc (the gram identity never
-    reaches the output, so not even a tie-break is observable — equal
-    counts give the same ``c``). Counting runs in one Arrow-batched
-    mapInPandas over the JVM-tokenized words (Counter over adjacent
-    token pairs; set() size == array_distinct size); the ratio
-    arithmetic and rounding stay in the same JVM expressions as before.
-    Zero exchanges."""
-    import pandas as pd
+    def counts(doc_id, t):
+        top = max(Counter(zip(t, t[1:])).values()) if len(t) >= 2 else 0
+        return [doc_id], [len(t)], [len(set(t))], [top]
 
-    d = _docs(spark, sf_dir, parallel=True)
-    base = d.select(
-        "doc_id",
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+").alias("w"))
-
-    def fn(batches):
-        from collections import Counter
-        for pdf in batches:
-            ids, nw, nd, cs = [], [], [], []
-            for (doc_id, w) in zip(pdf["doc_id"], pdf["w"]):
-                wl = [x for x in w if x]
-                ids.append(int(doc_id))
-                nw.append(len(wl))
-                nd.append(len(set(wl)))
-                cs.append(max(Counter(zip(wl, wl[1:])).values())
-                          if len(wl) >= 2 else 0)
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "n_words": pd.Series(nw, dtype="int32"),
-                "n_distinct": pd.Series(nd, dtype="int32"),
-                "c": pd.Series(cs, dtype="int32")})
-
-    stats = base.mapInPandas(
-        fn, "doc_id long, n_words int, n_distinct int, c int")
+    stats = _map_docs(_docs(spark, sf_dir, parallel=True), counts,
+                      "doc_id long, n_words int, n_distinct int, c int")
     return stats.select(
         "doc_id",
         F.round(F.col("n_distinct") / F.greatest("n_words", F.lit(1)), 4)
@@ -1005,41 +911,21 @@ def tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a float tf*log(N/df) score ties at ulp level and can flip ranks
     between engines).
 
-    Scale shape: the classic two-aggregation tf-idf plan — per-doc tf
-    (shuffle on doc_id, map-side combine), global df (shuffle on token;
-    tokens are zipf-bounded, partial aggregation absorbs the head), then
-    a shuffle join tf x df on token and a per-doc top-k window."""
-    import pandas as pd
+    Scale shape: per-doc tf is counted inside the batch stage (no
+    shuffle), global df shuffles on token (tokens are zipf-bounded,
+    partial aggregation absorbs the head), then a shuffle join tf x df
+    on token and a per-doc top-k window."""
+    from collections import Counter
 
-    d = _docs(spark, sf_dir, parallel=True)
+    # tf rows are unique per (doc_id, token), so df = tf rows per token:
+    # tf is materialized once and feeds both the join and df
+    def term_freqs(doc_id, t):
+        tf = Counter(t)
+        return [doc_id] * len(tf), tf.keys(), tf.values()
 
-    # per-doc term frequencies counted IN the batch stage (r8): the
-    # explode + (doc_id, token) groupBy exchange of ~4M token rows
-    # becomes a Counter per document emitting the per-(doc, token) rows
-    # directly; row order out of a Counter is irrelevant downstream
-    # (joins + aggregations). tf is materialized once and feeds BOTH
-    # the join and the df aggregation: tf rows are unique per
-    # (doc_id, token) by construction, so df = count of tf rows per
-    # token — the r7 plan's second corpus explode + distinct is gone.
-    def fn(batches):
-        from collections import Counter
-        for pdf in batches:
-            ids, toks, tfs = [], [], []
-            for (doc_id, w) in zip(pdf["doc_id"], pdf["w"]):
-                did = int(doc_id)
-                for (tok, c) in Counter(x for x in w if x).items():
-                    ids.append(did)
-                    toks.append(tok)
-                    tfs.append(c)
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "token": pd.Series(toks, dtype="object"),
-                "tf": pd.Series(tfs, dtype="int64")})
-
-    tf = (d.select("doc_id",
-                   F.split(F.lower(F.col("text")), "[^a-z0-9]+").alias("w"))
-          .mapInPandas(fn, "doc_id long, token string, tf long")
-          .localCheckpoint(eager=True))
+    tf = _map_docs(_docs(spark, sf_dir, parallel=True), term_freqs,
+                   "doc_id long, token string, tf long"
+                   ).localCheckpoint(eager=True)
     df = tf.groupBy("token").agg(F.count("*").alias("df"))
     w = Window.partitionBy("doc_id").orderBy(
         F.col("tf").desc(), F.col("df").asc(), F.col("token").asc())
@@ -1062,30 +948,10 @@ def docfreq_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: shingle -> distinct doc explode, one shuffle on the shingle;
     the >10% threshold keeps the output tiny regardless of corpus size,
     and the doc count is a scalar broadcast (crossJoin of one row).
-
-    r8: the per-doc distinct shingle STRINGS are built in one
-    Arrow-batched mapInPandas over the JVM-tokenized words (" ".join ==
-    concat_ws on non-null strings; dict order preserves first-seen like
-    array_distinct — irrelevant anyway, the rows feed a groupBy) —
-    replacing the interpreted per-element transform that dominated the
-    minhash family (§B of OPTIMIZATION_r08). Shingle text reaches the
-    output here, so no hash truncation — strings stay strings."""
-    import pandas as pd
-
+    Shingle text reaches the output here, so shingles stay strings."""
     d = _docs(spark, sf_dir, parallel=True)
-
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for w in pdf["w"]:
-                wl = [x for x in w if x]
-                rows.extend({" ".join(wl[i:i + 3])
-                             for i in range(len(wl) - 2)})
-            yield pd.DataFrame({"shingle": pd.Series(rows, dtype="object")})
-
-    per_doc = (d.select(F.split(F.lower(F.col("text")), "[^a-z0-9]+")
-                        .alias("w"))
-               .mapInPandas(fn, "shingle string"))
+    per_doc = _map_docs(d, lambda _, t: (set(_grams(t, 3)),),
+                        "shingle string")
     n_docs = d.select(F.count("*").alias("n_docs"))
     freq = per_doc.groupBy("shingle").agg(F.count("*").alias("n_docs_with"))
     return (freq.crossJoin(F.broadcast(n_docs))
@@ -1111,8 +977,8 @@ def substring_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes — the suffix-array result expressed relationally. Emits
     (id_a, id_b, n_shared_windows).
 
-    Scale shape: the sliding explode is ~tokens-per-doc rows carrying an
-    md5 digest only; one shuffle keyed on the window hash. Pair
+    Scale shape: the batch stage emits ~tokens-per-doc rows carrying an
+    8-byte window key only; one shuffle keyed on the window key. Pair
     formation joins only windows with document frequency in (1,
     ``_SUBSTR_MAX_DF``] — df=1 windows are unique (no pair), df >
     ``_SUBSTR_MAX_DF`` windows are corpus boilerplate whose g^2 bucket
@@ -1120,56 +986,17 @@ def substring_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     not a dup verdict). Bucket sizes are therefore bounded by the cap,
     never by corpus size.
 
-    The (doc_id, window-hash) frame is materialized ONCE (eager
+    The (doc_id, window key) frame is materialized ONCE (eager
     localCheckpoint, the dedup_minhash_pairs pattern) and feeds the df
-    gate and both self-join sides — the r5 plan rebuilt the stride-1
-    explode 4x (one corpus scan per consumer), invisible at sf0.1 but
-    4x the most expensive Generate at 100 TB (VERDICT r5 plan audit).
+    gate and both self-join sides. Window keys are ``_md5_64`` longs,
+    which feed only equality, never an output."""
 
-    r8: the window string construction + md5 move from an interpreted
-    per-element JVM ``transform`` into one Arrow-batched mapInPandas
-    (guide §4.2, the minhash_sigs_frame precedent), and the gram key
-    shrinks from the 32-char md5 hex string to its first 8 digest
-    bytes as a signed long — an 8-byte shuffle/join key instead of a
-    ~44-byte string one. The hash only ever feeds equality (df gate +
-    self-join); no gram value reaches the output, so truncating md5 to
-    64 bits changes results only on a 64-bit collision between two
-    DISTINCT windows of the corpus (~1e-7 at 4M windows — strictly the
-    md5-collision argument the string variant already made)."""
-    import numpy as np
-    import pandas as pd
+    def windows(doc_id, t):
+        keys = np.unique(_md5_64(_grams(t, _SUBSTR_W))).tolist()
+        return [doc_id] * len(keys), keys
 
-    d = _docs(spark, sf_dir, parallel=True)
-    # raw split only: the interpreted empty-token filter HOF (plus its
-    # re-evaluation inside the old WHERE) moves into the batch fn
-    base = d.select(
-        "doc_id",
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+").alias("w"))
-
-    def fn(batches):
-        import hashlib
-
-        md5 = hashlib.md5
-        for pdf in batches:
-            ids, grams = [], []
-            for (doc_id, w) in zip(pdf["doc_id"], pdf["w"]):
-                wl = [x for x in w if x]
-                if len(wl) < _SUBSTR_W:
-                    continue
-                seen = {
-                    md5((" ".join(wl[i:i + _SUBSTR_W])).encode("utf-8"))
-                    .digest()[:8]
-                    for i in range(len(wl) - (_SUBSTR_W - 1))}
-                for dig in seen:
-                    ids.append(int(doc_id))
-                    grams.append(int.from_bytes(dig, "big", signed=True))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "gram": pd.Series(np.array(grams, dtype=np.int64)
-                                  if grams else [], dtype="int64")})
-
-    g = (base.mapInPandas(fn, "doc_id long, gram long")
-         .localCheckpoint(eager=True))
+    g = _map_docs(_docs(spark, sf_dir, parallel=True), windows,
+                  "doc_id long, gram long").localCheckpoint(eager=True)
     dup_grams = (g.groupBy("gram").agg(F.count("*").alias("df"))
                  .where((F.col("df") > 1) & (F.col("df") <= _SUBSTR_MAX_DF))
                  .select("gram"))

@@ -11,10 +11,11 @@ from tests.conftest import SF_DIR
 @pytest.fixture(scope="module")
 def tiny_dir(tmp_path_factory):
     """documents.parquet with adversarial rows: empty/1/2-word docs (the
-    ANSI INVALID_ARRAY_INDEX trap) and a near-dup pair whose shingle
-    counts straddle a multiple of 16 (15 vs 16 shingles)."""
-    import pandas as pd
-
+    ANSI INVALID_ARRAY_INDEX trap), a near-dup pair whose shingle
+    counts straddle a multiple of 16 (15 vs 16 shingles), and a leading-
+    and a trailing-separator doc with the same words: the split yields
+    an empty first (last) token, which MinHash keeps in its first (last)
+    shingle and every other operator drops."""
     words = ["w%d" % i for i in range(18)]
     rows = [
         (0, ""),                        # empty -> split yields ['']
@@ -23,11 +24,120 @@ def tiny_dir(tmp_path_factory):
         (3, "a b c"),                   # exactly 3 tokens -> 1 shingle
         (4, " ".join(words[:17])),      # 15 shingles (bucket 0)
         (5, " ".join(words[:18])),      # 16 shingles (bucket 1)
+        (6, "--alpha beta gamma"),      # split -> ['', 'alpha', ...]
+        (7, "alpha beta gamma!!"),      # split -> [..., 'gamma', '']
     ]
-    d = tmp_path_factory.mktemp("tinydocs")
+    return _write_docs(tmp_path_factory.mktemp("tinydocs"), rows)
+
+
+def _write_docs(d, rows) -> str:
+    import pandas as pd
+
     pd.DataFrame(rows, columns=["doc_id", "text"]).to_parquet(
         os.path.join(d, "documents.parquet"))
     return str(d)
+
+
+# the operators that run the shared token-hash batch stage, with their
+# declared output schemas
+_KERNEL_OPS = {
+    "dedup_minhash": "struct<doc_id:bigint,%s>" % ",".join(
+        "sig%d:bigint" % j for j in range(64)),
+    "dedup_minhash_buckets": "struct<band:string,bucket_size:bigint,"
+                             "min_doc_id:bigint,max_doc_id:bigint>",
+    "dedup_minhash_pairs": "struct<id_a:bigint,id_b:bigint,"
+                           "est_jaccard:double>",
+    "simhash": "struct<doc_id:bigint,simhash:string>",
+    "simhash_pairs": "struct<id_a:bigint,id_b:bigint,hamming:int>",
+    "ngram_jaccard_pairs": "struct<id_a:bigint,id_b:bigint,jaccard:double>",
+    "repetition_filter": "struct<doc_id:bigint,distinct_ratio:double,"
+                         "top_bigram_frac:double>",
+    "tfidf_keywords": "struct<doc_id:bigint,rank:int,token:string,"
+                      "tf:bigint,df:bigint>",
+    "docfreq_boilerplate": "struct<shingle:string,n_docs_with:bigint,"
+                           "doc_frac:double>",
+    "substring_dup_pairs": "struct<id_a:bigint,id_b:bigint,"
+                           "n_shared_windows:bigint>",
+}
+
+
+def _oracle_diff(spark, name: str, sf_dir: str):
+    """(spark frame, compare_frames result) of ``name`` against its
+    DuckDB oracle over ``sf_dir``'s documents table."""
+    import duckdb
+
+    from pdfminer_spark.ops.textops import ORACLES, QUERIES
+    from tests.test_oracle_coverage import _oracle_check_mod
+
+    got = QUERIES[name](spark, sf_dir)
+    with duckdb.connect() as con:
+        con.execute("CREATE VIEW documents AS SELECT * FROM "
+                    "read_parquet('%s')"
+                    % os.path.join(sf_dir, "documents.parquet"))
+        want = con.execute(ORACLES[name]).fetchdf()
+    return got, _oracle_check_mod().compare_frames(got.toPandas(), want)
+
+
+def _assert_match(name: str, r: dict) -> None:
+    ok = all(r[k] for k in ("rows_match", "schema_match", "values_match",
+                            "kinds_match", "hash_match"))
+    assert ok, (name, {k: v for k, v in r.items() if k != "detail"},
+                r["detail"])
+
+
+def test_md5_64_reads_the_engines_md5_hex():
+    """The kernel's int64 hash is hex digits 1-16 of md5: its halves are
+    MinHash's (h1, h2), its shifted bits SimHash's digit bits, and it
+    is the big-endian signed long of the first 8 digest bytes."""
+    import hashlib
+
+    from pdfminer_spark.ops.textops import _SIM_SHIFTS, _grams, _md5_64
+
+    grams = _grams(["", "alpha", "beta", "gamma", "é", ""], 3)
+    assert grams[0] == " alpha beta" and len(grams) == 4
+    v = _md5_64(grams)
+    for (g, x) in zip(grams, v.tolist()):
+        d = hashlib.md5(g.encode("utf-8"))
+        h = d.hexdigest()
+        assert x == int.from_bytes(d.digest()[:8], "big", signed=True)
+        assert (x >> 32) & 0xFFFFFFFF == int(h[:8], 16)
+        assert x & 0xFFFFFFFF == int(h[8:16], 16)
+        assert [(x >> int(s)) & 1 for s in _SIM_SHIFTS] == [
+            (int(h[j // 4], 16) >> (j % 4)) & 1 for j in range(64)]
+    assert _md5_64([]).shape == (0,)
+
+
+@pytest.mark.parametrize("corpus", ["sf", "tiny"])
+@pytest.mark.parametrize("name", list(_KERNEL_OPS))
+def test_kernel_ops_match_oracle(spark, tiny_dir, name, corpus):
+    """Every operator built on the token-hash batch stage equals its
+    DuckDB oracle (rows, schema, values, dtype kinds, exact value hash)
+    on the sf corpus and on the adversarial tiny corpus."""
+    (_, r) = _oracle_diff(spark, name, SF_DIR if corpus == "sf" else tiny_dir)
+    _assert_match(name, r)
+
+
+@pytest.fixture(scope="module")
+def short_dir(tmp_path_factory):
+    """Every doc splits into at most 2 tokens, empty ones included, so
+    no doc has a 3-gram: the shingle stages emit zero rows from every
+    batch."""
+    rows = [(0, ""), (1, "one"), (2, "two words"), (3, "--two"),
+            (4, "words!"), (5, "!!"), (6, "one"), (7, "Two WORDS")]
+    return _write_docs(tmp_path_factory.mktemp("shortdocs"), rows)
+
+
+@pytest.mark.parametrize("name", list(_KERNEL_OPS))
+def test_kernel_ops_all_short_corpus(spark, short_dir, name):
+    """Batches that emit no rows still yield the declared schema (an
+    untyped empty pandas column fails the Arrow cast), and the result
+    equals the oracle: zero rows for every shingle-based operator."""
+    (got, r) = _oracle_diff(spark, name, short_dir)
+    assert got.schema.simpleString() == _KERNEL_OPS[name]
+    _assert_match(name, r)
+    if name not in ("simhash", "simhash_pairs", "repetition_filter",
+                    "tfidf_keywords"):
+        assert r["spark_rows"] == 0
 
 
 def test_short_docs_do_not_crash_minhash(spark, tiny_dir):
@@ -36,7 +146,7 @@ def test_short_docs_do_not_crash_minhash(spark, tiny_dir):
     out = dedup_minhash(spark, tiny_dir).collect()
     ids = sorted(r["doc_id"] for r in out)
     # <3-token docs drop out (no 3-gram shingles); no ANSI index error
-    assert ids == [3, 4, 5]
+    assert ids == [3, 4, 5, 6, 7]
     assert all(r["sig0"] is not None for r in out)
 
 
