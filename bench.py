@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -246,9 +247,7 @@ def skew_telemetry(spark, cpus: int) -> dict:
                 break
     for (df, _cnt) in frames.values():
         df.unpersist()
-    med = sorted(ratios)[len(ratios) // 2] if len(ratios) % 2 else round(
-        (sorted(ratios)[len(ratios) // 2 - 1]
-         + sorted(ratios)[len(ratios) // 2]) / 2, 3)
+    med = round(statistics.median(ratios), 3)
     controls = [c for r in rep_log
                 for c in (r["control_uniform_s"], r["control_skewed_s"])]
     return {
@@ -393,10 +392,7 @@ def main() -> None:
             # VERDICT r2 #4: publish the unclamped per-rep ratios and
             # their median alongside the clamped max; keep probing until
             # the median clears the gate too (or reps run out)
-            med = sorted(raw_ratios)[len(raw_ratios) // 2] \
-                if len(raw_ratios) % 2 else round(
-                    (sorted(raw_ratios)[len(raw_ratios) // 2 - 1]
-                     + sorted(raw_ratios)[len(raw_ratios) // 2]) / 2, 3)
+            med = round(statistics.median(raw_ratios), 3)
             if rep >= 1 and eff >= 0.86 and med >= 0.8:
                 break
         result["scaling"] = {

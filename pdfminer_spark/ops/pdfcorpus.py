@@ -72,7 +72,8 @@ def _pdf_docs(spark: SparkSession) -> DataFrame:
     })
     tr = spark.createDataFrame(pdf, TRANSCRIPTS_SCHEMA)
     # 10 one-page docs: cap the fan-out (32 default shuffle partitions
-    # would fork a python worker per mostly-empty partition) and
+    # would run a python task per mostly-empty partition, and each task
+    # pays a fixed set-up cost in its reused worker) and
     # materialize via eager localCheckpoint — the frame feeds BOTH the
     # gopher/paragraph chain and the MinHash chain, and without the
     # checkpoint the PDF extraction would execute once per consumer

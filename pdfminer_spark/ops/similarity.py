@@ -143,9 +143,11 @@ def _probe_cells(cents: list, qv: list, n_probes: int) -> list[int]:
     return [cell for (cell, _c) in scored[:n_probes]]
 
 
-def _query_vec(spark: SparkSession, sf_dir: str) -> list | None:
-    """The vec_id=0 query embedding as driver-side Python floats (exact
-    float32 -> float64 widening through collect), or None if absent.
+def _query_vec(spark: SparkSession,
+               sf_dir: str) -> tuple[bool, list | None]:
+    """Whether the vec_id=0 query row exists, and its embedding as
+    driver-side Python floats (exact float32 -> float64 widening through
+    collect), or None if the row is absent or its embedding is NULL.
     One bounded 1-row fetch off the pushdown-filtered scan — it replaces
     the per-query BroadcastExchange jobs that each re-scanned the table
     just to ship this single row (guide §1.2: the r8 isolation bench
@@ -153,7 +155,9 @@ def _query_vec(spark: SparkSession, sf_dir: str) -> list | None:
     broadcast/sort job overhead at sf0.1)."""
     row = (_emb(spark, sf_dir).filter(F.col("vec_id") == 0)
            .select("embedding").first())
-    return None if row is None else [float(x) for x in row["embedding"]]
+    if row is None or row["embedding"] is None:
+        return (row is not None, None)
+    return (True, [float(x) for x in row["embedding"]])
 
 
 def _lit_vec(vals: list):
@@ -177,13 +181,15 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one partition; the per-row HOF cosine would otherwise run on one
     # core)
     e = _emb(spark, sf_dir, parallel=True)
-    qv = _query_vec(spark, sf_dir)
+    found, qv = _query_vec(spark, sf_dir)
     base = e.filter(F.col("vec_id") != 0)
     if qv is None:
-        # no query vector: the old crossJoin against an empty broadcast
-        # produced an empty frame — emit the same empty frame
+        # a NULL query embedding makes every cosine NULL (the oracle's
+        # cross join still yields a row per vector); no query row at all
+        # makes the cross join, and so the frame, empty
         cos = F.lit(None).cast("double")
-        base = base.where(F.lit(False))
+        if not found:
+            base = base.where(F.lit(False))
     else:
         q_emb = _lit_vec(qv)
         cos = _dot(F.col("embedding"), q_emb) / (
@@ -663,9 +669,9 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from the window exchange)
     e = _emb(spark, sf_dir, parallel=True)
     cents = _ivf_centroids(spark, sf_dir)
-    qv = _query_vec(spark, sf_dir)
+    found, qv = _query_vec(spark, sf_dir)
     assigned = _ivf_assign(e, cents)
-    if qv is None:
+    if not found:
         # no query vector: the old plan crossJoined an empty broadcast
         # -> empty result; emit the same empty frame
         cand = assigned.where(F.lit(False))

@@ -206,6 +206,37 @@ def test_ivf_partial_table_triggers_retrain_and_prune(spark, tmp_path,
     assert (table / "_SUCCESS").exists(), "committed tables stay live"
 
 
+@pytest.mark.parametrize("query", ["null_embedding", "missing"])
+def test_cosine_topk_matches_oracle_without_a_query_vector(spark, tmp_path,
+                                                           query):
+    """A vec_id=0 row whose embedding is NULL makes every cosine NULL:
+    the oracle still returns 25 rows, vec_ids 1-25. Without the row the
+    result is empty."""
+    import duckdb
+
+    from pdfminer_spark.ops.similarity import ORACLES, ann_cosine_topk
+
+    rng = np.random.default_rng(3)
+    df = pd.DataFrame({
+        "vec_id": np.arange(40, dtype=np.int64),
+        "embedding": [list(map(float, v)) for v in
+                      rng.normal(size=(40, 8)).astype(np.float32)],
+        "label": np.zeros(40, dtype=np.int32),
+    })
+    if query == "missing":
+        df = df[df.vec_id != 0]
+    else:
+        df.at[0, "embedding"] = None
+    df.to_parquet(tmp_path / "embeddings.parquet")
+    got = [tuple(r) for r in ann_cosine_topk(spark, str(tmp_path)).collect()]
+    con = duckdb.connect()
+    con.execute("CREATE VIEW embeddings AS SELECT * FROM "
+                f"read_parquet('{tmp_path}/embeddings.parquet')")
+    assert got == con.execute(ORACLES["ann_cosine_topk"]).fetchall()
+    assert got == ([(i, None) for i in range(1, 26)]
+                   if query == "null_embedding" else [])
+
+
 def test_semantic_dedup_drops_within_cell_keep_first(spark, tmp_path):
     """SemDeDup semantics on a seeded corpus: a planted near-identical
     pair (cos ~ 1) must keep the smaller vec_id and drop the larger;
@@ -250,7 +281,7 @@ def test_probe_selection_matches_engine_subplan(spark, seeded_dir):
 
     for sf in (SF_DIR, seeded_dir):
         cents = sim._ivf_centroids(spark, sf)
-        qv = sim._query_vec(spark, sf)
+        _found, qv = sim._query_vec(spark, sf)
         cent = spark.createDataFrame(cents,
                                      "cell int, centroid array<double>")
         q = (sim._emb(spark, sf).filter(F.col("vec_id") == 0)

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -46,12 +47,6 @@ def control_probe() -> float:
     for _ in range(256):
         h.update(block)
     return round(time.time() - t0, 4)
-
-
-def median(xs: list[float]) -> float:
-    s = sorted(xs)
-    n = len(s)
-    return round(s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2, 3)
 
 
 def main() -> None:
@@ -82,7 +77,8 @@ def main() -> None:
                 rec["times"][variant].append(round(time.time() - t0, 3))
                 rec["controls"].append(ctl)
                 spark.catalog.clearCache()
-        rec["median"] = {v: median(ts) for v, ts in rec["times"].items()}
+        rec["median"] = {v: round(statistics.median(ts), 3)
+                         for v, ts in rec["times"].items()}
         rec["phase_drift_max"] = round(
             max(rec["controls"]) / min(rec["controls"]), 2)
         result["ops"][name] = rec
