@@ -13,12 +13,12 @@ deflate) are enforced where ``zipfile`` is permissive.
 """
 from __future__ import annotations
 
+import hashlib
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..spark.batches import map_rows
 from .textops import _docs
 
 _MAX_ZIP_MEMBERS = 65_535           # the format's own 2-byte limit
@@ -168,18 +168,11 @@ def _build_docx(doc_id: int, text: str) -> bytes:
     return buf.getvalue()
 
 
-def _zip_members_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import hashlib
-
-    for pdf in it:
-        rows = []
-        for (doc_id, text) in zip(pdf["doc_id"], pdf["text"]):
-            for m in parse_zip(_build_docx(int(doc_id), text)):
-                rows.append((int(doc_id), m["name"], m["method"],
-                             m["usize"],
-                             hashlib.md5(m["content"]).hexdigest()))
-        yield pd.DataFrame(rows, columns=[
-            "doc_id", "name", "method", "usize", "content_md5"])
+def _zip_member_rows(doc_id, text):
+    ms = parse_zip(_build_docx(doc_id, text))
+    return ([doc_id] * len(ms), [m["name"] for m in ms],
+            [m["method"] for m in ms], [m["usize"] for m in ms],
+            [hashlib.md5(m["content"]).hexdigest() for m in ms])
 
 
 def zip_members(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -191,22 +184,15 @@ def zip_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the document text and the builder's closed forms — a
     local-header offset slip, a truncated inflate, or a CRC confusion
     is a visible mismatch."""
-    return (_docs(spark, sf_dir, parallel=True)
-            .select("doc_id", "text")
-            .mapInPandas(_zip_members_batches,
-                         schema=("doc_id long, name string, method int,"
-                                 " usize int, content_md5 string")))
+    return map_rows(_docs(spark, sf_dir, parallel=True)
+                    .select("doc_id", "text"), _zip_member_rows,
+                    "doc_id long, name string, method int, usize int,"
+                    " content_md5 string")
 
 
-def _docx_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        rows = []
-        for (doc_id, text) in zip(pdf["doc_id"], pdf["text"]):
-            (n_paras, out) = extract_docx_text(
-                _build_docx(int(doc_id), text))
-            rows.append((int(doc_id), n_paras, out))
-        yield pd.DataFrame(rows, columns=[
-            "doc_id", "n_paragraphs", "doc_text"])
+def _docx_row(doc_id, text):
+    (n_paras, out) = extract_docx_text(_build_docx(doc_id, text))
+    return ([doc_id], [n_paras], [out])
 
 
 def docx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -217,13 +203,12 @@ def docx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     text. The oracle reconstructs the expected text from the midpoint
     split alone — extraction must round-trip every byte.
 
-    Scale: one map-side stage on the scan partitions, like warc_extract
-    — at lake scale the same body runs on real .docx payload cells."""
-    return (_docs(spark, sf_dir, parallel=True)
-            .select("doc_id", "text")
-            .mapInPandas(_docx_batches,
-                         schema=("doc_id long, n_paragraphs int, "
-                                 "doc_text string")))
+    Scale: one map-side stage after the round-robin spread (``_docs``),
+    like warc_extract — at lake scale the same per-row function runs on
+    real .docx payload cells."""
+    return map_rows(_docs(spark, sf_dir, parallel=True)
+                    .select("doc_id", "text"), _docx_row,
+                    "doc_id long, n_paragraphs int, doc_text string")
 
 
 _CT_LEN = len('<?xml version="1.0"?><Types xmlns="http://schemas.'

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..spark.batches import map_rows
 from .textops import _docs, _hex2int_sql, _hex2long
 
 # -- PII scrubbing -----------------------------------------------------------------
@@ -841,50 +842,39 @@ def payload_decompress(spark: SparkSession, sf_dir: str) -> DataFrame:
     text alone — a wrong sniff, a partial decompress, or any cap slip
     is a visible hash mismatch.
 
-    Scale: one map-side stage on the scan partitions (spread to the
-    session parallelism — the per-row bz2/lzma work is CPU-heavy);
+    Scale: one map-side stage after the round-robin spread to the
+    session parallelism (``_docs`` — the per-row bz2/lzma work is
+    CPU-heavy);
     per-payload memory is bounded by the 16 MiB cap regardless of what
     the compressed bytes claim."""
-    import pandas as pd
+    import bz2
+    import hashlib
+    import lzma
+    import zlib
 
-    schema = ("doc_id long, fmt string, orig_len int, text_md5 string")
+    def per_row(doc_id, text):
+        raw = text.encode("utf-8")
+        k = doc_id % 4
+        # r8: fastest effort levels — the payload synthesis is fixture
+        # work, and the query's OUTPUT (fmt, length, md5 of the
+        # decompressed bytes) is independent of the compressor's
+        # effort; the decompressor still sees a genuine gzip/zlib/bz2/xz
+        # stream either way
+        if k == 0:
+            c = zlib.compressobj(1, zlib.DEFLATED, 16 + zlib.MAX_WBITS)
+            payload = c.compress(raw) + c.flush()
+        elif k == 1:
+            payload = zlib.compress(raw, 1)
+        elif k == 2:
+            payload = bz2.compress(raw, 1)
+        else:
+            payload = lzma.compress(raw, format=lzma.FORMAT_XZ, preset=0)
+        (fmt, out) = decompress_payload(payload)
+        return ([doc_id], [fmt], [len(out)], [hashlib.md5(out).hexdigest()])
 
-    def batches(it):
-        import bz2
-        import hashlib
-        import lzma
-        import zlib
-
-        for pdf in it:
-            rows = []
-            for (doc_id, text) in zip(pdf["doc_id"], pdf["text"]):
-                raw = text.encode("utf-8")
-                k = int(doc_id) % 4
-                # r8: fastest effort levels — the payload synthesis is
-                # fixture work, and the query's OUTPUT (fmt, length,
-                # md5 of the decompressed bytes) is independent of the
-                # compressor's effort; the decompressor still sees a
-                # genuine gzip/zlib/bz2/xz stream either way
-                if k == 0:
-                    c = zlib.compressobj(1, zlib.DEFLATED,
-                                         16 + zlib.MAX_WBITS)
-                    payload = c.compress(raw) + c.flush()
-                elif k == 1:
-                    payload = zlib.compress(raw, 1)
-                elif k == 2:
-                    payload = bz2.compress(raw, 1)
-                else:
-                    payload = lzma.compress(raw, format=lzma.FORMAT_XZ,
-                                            preset=0)
-                (fmt, out) = decompress_payload(payload)
-                rows.append((int(doc_id), fmt, len(out),
-                             hashlib.md5(out).hexdigest()))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "fmt", "orig_len", "text_md5"])
-
-    return (_docs(spark, sf_dir, parallel=True)
-            .select("doc_id", "text")
-            .mapInPandas(batches, schema=schema))
+    return map_rows(_docs(spark, sf_dir, parallel=True)
+                    .select("doc_id", "text"), per_row,
+                    "doc_id long, fmt string, orig_len int, text_md5 string")
 
 
 def domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1480,30 +1470,19 @@ def encoding_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted form directly (REPLACE + CHR(233)) and the expected round
     count from doc_id — an under- or over-peel is a visible mismatch.
 
-    Scale: one map-side stage on the scan partitions (spread to the
-    session parallelism); per-row work is linear in the text."""
-    import pandas as pd
+    Scale: one map-side stage after the round-robin spread to the
+    session parallelism (``_docs``); per-row work is linear in the
+    text."""
+    def per_row(doc_id, text):
+        corrupted = text.replace("e", "é")
+        for _ in range(1 + doc_id % 2):
+            corrupted = corrupted.encode("utf-8").decode("latin-1")
+        (repaired, rounds) = repair_mojibake(corrupted)
+        return ([doc_id], [rounds], [repaired])
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for (doc_id, text) in zip(pdf["doc_id"], pdf["text"]):
-                planted = text.replace("e", "é")
-                corrupted = planted
-                n_corrupt = 1 + int(doc_id) % 2
-                for _ in range(n_corrupt):
-                    corrupted = corrupted.encode("utf-8") \
-                        .decode("latin-1")
-                (repaired, rounds) = repair_mojibake(corrupted)
-                rows.append((int(doc_id), rounds, repaired))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "rounds", "text_repaired"])
-
-    return (_docs(spark, sf_dir, parallel=True)
-            .select("doc_id", "text")
-            .mapInPandas(batches,
-                         schema="doc_id long, rounds int, "
-                                "text_repaired string"))
+    return map_rows(_docs(spark, sf_dir, parallel=True)
+                    .select("doc_id", "text"), per_row,
+                    "doc_id long, rounds int, text_repaired string")
 
 
 def unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1518,27 +1497,17 @@ def unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (NFC_NORMALIZE) — agreement is two independent implementations of
     the Unicode composition tables matching codepoint-for-codepoint.
 
-    Scale: one map-side stage on the scan partitions."""
-    import pandas as pd
+    Scale: one map-side stage after the round-robin spread (``_docs``)."""
+    import unicodedata
 
-    def batches(it):
-        import unicodedata
+    def per_row(doc_id, text):
+        planted = text.replace("a", "a\u0301")
+        composed = unicodedata.normalize("NFC", planted)
+        return ([doc_id], [len(planted)], [len(composed)], [composed])
 
-        for pdf in it:
-            rows = []
-            for (doc_id, text) in zip(pdf["doc_id"], pdf["text"]):
-                planted = text.replace("a", "a\u0301")
-                composed = unicodedata.normalize("NFC", planted)
-                rows.append((int(doc_id), len(planted), len(composed),
-                             composed))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "n_before", "n_after", "text_nfc"])
-
-    return (_docs(spark, sf_dir, parallel=True)
-            .select("doc_id", "text")
-            .mapInPandas(batches,
-                         schema="doc_id long, n_before int, "
-                                "n_after int, text_nfc string"))
+    return map_rows(_docs(spark, sf_dir, parallel=True)
+                    .select("doc_id", "text"), per_row,
+                    "doc_id long, n_before int, n_after int, text_nfc string")
 
 
 ORACLES["unicode_normalize"] = """

@@ -18,10 +18,11 @@ from __future__ import annotations
 
 import datetime
 import os
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from ..spark.batches import map_rows
 
 REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SPANS_PARQUET = os.path.join(REPO, "fixtures", "layout_spans.parquet")
@@ -51,25 +52,15 @@ def _corpus_transcripts(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(pdf, TRANSCRIPTS_SCHEMA)
 
 
-def _explode_boxes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _box_rows(conv_id, turn_idx, boxes):
     from pdfminer_spark.pdf.xmlout import bbox2str
 
-    for pdf in batches:
-        out = {k: [] for k in ("conv_id", "turn_idx", "box_id", "page",
-                               "bbox", "wmode", "text")}
-        for (conv_id, turn_idx, boxes) in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["boxes"]):
-            for b in boxes:
-                out["conv_id"].append(conv_id)
-                out["turn_idx"].append(int(turn_idx))
-                out["box_id"].append(int(b["box_id"]))
-                out["page"].append(int(b["page"]))
-                out["bbox"].append(
-                    bbox2str((b["x0"], b["y0"], b["x1"], b["y1"])))
-                out["wmode"].append(
-                    "vertical" if b["wmode"] == "tb-rl" else "horizontal")
-                out["text"].append(b["text"])
-        yield pd.DataFrame(out)
+    return ([conv_id] * len(boxes), [turn_idx] * len(boxes),
+            [b["box_id"] for b in boxes], [b["page"] for b in boxes],
+            [bbox2str((b["x0"], b["y0"], b["x1"], b["y1"])) for b in boxes],
+            ["vertical" if b["wmode"] == "tb-rl" else "horizontal"
+             for b in boxes],
+            [b["text"] for b in boxes])
 
 
 def layout_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -81,8 +72,8 @@ def layout_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
     tr = _corpus_transcripts(spark)
     ext = extract_transcripts(tr, page_numbers=[0], detect_vertical=True,
                               with_boxes=True, salt=2)
-    return ext.select("conv_id", "turn_idx", "boxes").mapInPandas(
-        _explode_boxes, schema=BOXES_DDL)
+    return map_rows(ext.select("conv_id", "turn_idx", "boxes"), _box_rows,
+                    BOXES_DDL)
 
 
 ORACLES: dict[str, str] = {

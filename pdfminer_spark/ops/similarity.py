@@ -133,7 +133,11 @@ def _round_half_up(x: float, digits: int) -> float:
 def _probe_cells(cents: list, qv: list, n_probes: int) -> list[int]:
     """Top ``n_probes`` cells by rounded centroid-vs-query cosine, ties
     to the smaller cell id — the driver-side replica of the old 8-row
-    Spark subplan (ORDER BY ccos DESC, cell ASC LIMIT n)."""
+    Spark subplan (ORDER BY ccos DESC, cell ASC LIMIT n). A NULL query
+    vector (``qv`` None) makes every cosine NULL, a tie across all
+    cells: the smallest cell ids."""
+    if qv is None:
+        return sorted(cell for (cell, _v) in cents)[:n_probes]
     scored = [
         (cell, _round_half_up(
             _py_dot(vec, qv) / (_py_norm(vec) * _py_norm(qv)), 4))
@@ -692,9 +696,14 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         probed = _probe_cells(cents, qv, _IVF_PROBES)
         cand = (assigned.where(F.col("vec_id") != 0)
                 .where(F.col("cell").isin(probed)))
-        q_emb = _lit_vec(qv)
-        cos = _dot(F.col("embedding"), q_emb) / (
-            _norm(F.col("embedding")) * _norm(q_emb))
+        if qv is None:
+            # a NULL query embedding makes every cosine NULL, as in
+            # ann_cosine_topk
+            cos = F.lit(None).cast("double")
+        else:
+            q_emb = _lit_vec(qv)
+            cos = _dot(F.col("embedding"), q_emb) / (
+                _norm(F.col("embedding")) * _norm(q_emb))
     return (
         cand.select("vec_id", "cell", F.round(cos, 4).alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())

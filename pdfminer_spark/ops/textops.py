@@ -5,8 +5,9 @@ counting, fingerprinting), each with DuckDB oracle SQL. Tokenizing,
 joins, shuffles and aggregations are JVM-side Spark SQL; the per-token
 and per-gram work of the hash and count operators (MinHash, SimHash,
 n-gram Jaccard, repetition, tf-idf, boilerplate shingles, substring
-windows) runs in Python, in the one Arrow-batched ``mapInPandas`` stage
-of the token-hash kernel below (``_map_docs``).
+windows) runs in Python, through the token-hash kernel below
+(``_map_docs``) on the repo's one per-row batch loop,
+``spark/batches.map_rows``.
 
 Cross-engine determinism rule: any hash used in a comparison is md5 (hex
 string in both engines); numeric derivations are rounded on both sides;
@@ -33,6 +34,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..spark.batches import map_rows
 from ..spark.curate import with_quality_features
 
 
@@ -107,44 +109,18 @@ def _md5_64(strings) -> np.ndarray:
     return np.frombuffer(digests, dtype=">i8")[::2].astype(np.int64)
 
 
-_NP_DTYPE = {"long": np.int64, "int": np.int32}
-
-
 def _map_docs(d: DataFrame, per_doc, ddl: str,
               keep_empty: bool = False) -> DataFrame:
-    """The text operators' one Python batch loop. ``d``'s ``text`` is
-    tokenized by ``_split_words`` on the JVM; each Arrow batch is walked
-    doc by doc, and ``per_doc(doc_id, tokens)`` returns the doc's output
-    rows column-wise: one sequence per ``ddl`` column, all of one length
-    (an empty tuple drops the doc). Empty tokens are removed first
-    unless ``keep_empty`` — MinHash's oracle shingles the raw split.
+    """``map_rows`` over ``d``'s documents tokenized by ``_split_words``
+    on the JVM: ``per_doc(doc_id, tokens)`` returns the doc's output
+    rows column-wise, as ``map_rows`` defines. Empty tokens are removed
+    first unless ``keep_empty`` — MinHash's oracle shingles the raw
+    split."""
+    def per_row(doc_id, w):
+        return per_doc(doc_id, list(w) if keep_empty else [t for t in w if t])
 
-    Output stays columnar end to end: per-row tuples and their
-    transposition cost more than the hashing for the many-row
-    operators. Columns get the dtypes ``ddl`` declares, so a batch that
-    emits nothing still yields typed columns (an empty untyped column is
-    float64, which Arrow cannot cast to ``array<long>`` or ``string``);
-    numeric columns go through numpy, several times faster than an
-    int64 ``pd.Series`` from Python ints."""
-    import pandas as pd
-
-    fields = [f.split() for f in ddl.split(",")]
-
-    def fn(batches):
-        for pdf in batches:
-            cols = [[] for _ in fields]
-            for (doc_id, w) in zip(pdf["doc_id"], pdf["w"]):
-                out = per_doc(
-                    doc_id, list(w) if keep_empty else [t for t in w if t])
-                for (c, v) in zip(cols, out):
-                    c.extend(v)
-            yield pd.DataFrame({
-                name: (np.array(c, dtype=_NP_DTYPE[t]) if t in _NP_DTYPE
-                       else pd.Series(c, dtype="object"))
-                for ((name, t), c) in zip(fields, cols)})
-
-    return (d.select("doc_id", _split_words().alias("w"))
-            .mapInPandas(fn, ddl))
+    return map_rows(d.select("doc_id", _split_words().alias("w")),
+                    per_row, ddl)
 
 
 # -- exact dedup ---------------------------------------------------------------

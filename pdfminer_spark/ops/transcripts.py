@@ -23,20 +23,20 @@ Registered queries put each under the driver's oracle gate with
 closed-form expected outputs (the markdown_strip/warc_extract
 wrap-and-recover pattern).
 
-Scale: ``subtitle_cues`` and ``email_quote_strip`` are one map-side
-stage on the scan partitions (per-row independent, no exchange);
+Scale: ``subtitle_cues`` and ``email_quote_strip`` are per-row
+functions run by ``spark/batches.map_rows``: one map-side stage after a
+round-robin spread of the scan (``_docs``);
 ``cues_to_turns`` is ONE exchange — a window partitioned by doc_id —
 then a same-key aggregation that reuses the window's partitioning.
 """
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..spark.batches import map_rows
 from .textops import _docs
 
 _MAX_CUES = 1 << 20  # hostile-input ceiling per caption cell
@@ -129,42 +129,36 @@ def _fmt_ts(ms: int, sep: str) -> str:
     return "%02d:%02d:%02d%s%03d" % (h, mi, se, sep, mms)
 
 
-def _subtitle_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    def build(doc_id: int, text: str) -> tuple[str, str]:
-        words = text.split(" ")
-        n = 1 + doc_id % 4
-        step = 1000 + doc_id % 500
-        if doc_id % 2 == 0:
-            blocks = []
-            for i in range(n):
-                w = words[(i * 7) % len(words)]
-                blocks.append(
-                    "%d\n%s --> %s\nc%d <i>%s</i>\n"
-                    % (i + 1, _fmt_ts(i * step, ","),
-                       _fmt_ts(i * step + 900, ","), i, w))
-            return ("srt", "\n".join(blocks))
-        blocks = ["WEBVTT\n", "NOTE synthetic caption track\n"]
+def _build_captions(doc_id: int, text: str) -> tuple[str, str]:
+    words = text.split(" ")
+    n = 1 + doc_id % 4
+    step = 1000 + doc_id % 500
+    if doc_id % 2 == 0:
+        blocks = []
         for i in range(n):
             w = words[(i * 7) % len(words)]
-            ident = ("cue-%d\n" % i) if i % 2 == 1 else ""
             blocks.append(
-                "%s%s --> %s align:start\n<v S%d>c%d <c>%s</c>\n"
-                % (ident, _fmt_ts(i * step, "."),
-                   _fmt_ts(i * step + 900, "."), i % 2, i, w))
-        return ("vtt", "\n".join(blocks))
+                "%d\n%s --> %s\nc%d <i>%s</i>\n"
+                % (i + 1, _fmt_ts(i * step, ","),
+                   _fmt_ts(i * step + 900, ","), i, w))
+        return ("srt", "\n".join(blocks))
+    blocks = ["WEBVTT\n", "NOTE synthetic caption track\n"]
+    for i in range(n):
+        w = words[(i * 7) % len(words)]
+        ident = ("cue-%d\n" % i) if i % 2 == 1 else ""
+        blocks.append(
+            "%s%s --> %s align:start\n<v S%d>c%d <c>%s</c>\n"
+            % (ident, _fmt_ts(i * step, "."),
+               _fmt_ts(i * step + 900, "."), i % 2, i, w))
+    return ("vtt", "\n".join(blocks))
 
-    for pdf in it:
-        rows = []
-        for (doc_id, text) in zip(pdf["doc_id"], pdf["text"]):
-            (fmt, payload) = build(int(doc_id), text)
-            cues = (parse_srt(payload) if fmt == "srt"
-                    else parse_vtt(payload))
-            for (i, c) in enumerate(cues):
-                rows.append((int(doc_id), fmt, i, c["start_ms"],
-                             c["end_ms"], c["speaker"], c["text"]))
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "fmt", "cue_idx", "start_ms",
-                           "end_ms", "speaker", "text"])
+
+def _cue_rows(doc_id, text):
+    (fmt, payload) = _build_captions(doc_id, text)
+    cues = parse_srt(payload) if fmt == "srt" else parse_vtt(payload)
+    return ([doc_id] * len(cues), [fmt] * len(cues), range(len(cues)),
+            [c["start_ms"] for c in cues], [c["end_ms"] for c in cues],
+            [c["speaker"] for c in cues], [c["text"] for c in cues])
 
 
 def subtitle_cues(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -176,14 +170,11 @@ def subtitle_cues(spark: SparkSession, sf_dir: str) -> DataFrame:
     parser must recover every cue's exact timing, speaker, and
     de-tagged text.
 
-    Scale: one map-side stage on the scan partitions."""
-    return (_docs(spark, sf_dir, parallel=True)
-            .select("doc_id", "text")
-            .mapInPandas(
-                _subtitle_batches,
-                schema="doc_id long, fmt string, cue_idx int, "
-                       "start_ms long, end_ms long, speaker string, "
-                       "text string"))
+    Scale: one map-side stage after the round-robin spread (``_docs``)."""
+    return map_rows(_docs(spark, sf_dir, parallel=True)
+                    .select("doc_id", "text"), _cue_rows,
+                    "doc_id long, fmt string, cue_idx int, start_ms long,"
+                    " end_ms long, speaker string, text string")
 
 
 _TURN_GAP_MS = 2000  # silence threshold between merged cues
@@ -280,32 +271,27 @@ def strip_email_reply(msg: str) -> tuple[str, int]:
     return (re.sub(r"\s+", " ", " ".join(kept)).strip(), n_quoted)
 
 
-def _email_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    def build(doc_id: int, text: str) -> str:
-        return ("From: alice@example.org\n"
-                "To: list@example.org\n"
-                "Subject: Re: doc %d\n"
-                "\n"
-                "Thanks!\n"
-                "%s\n"
-                "\n"
-                "On Mon, 5 Jan 2026, Bob wrote:\n"
-                "> quoted line one\n"
-                "> quoted line two\n"
-                ">> deeper quote\n"
-                "\n"
-                "-- \n"
-                "Alice\n"
-                "sig line\n" % (doc_id, text))
+def _build_reply(doc_id: int, text: str) -> str:
+    return ("From: alice@example.org\n"
+            "To: list@example.org\n"
+            "Subject: Re: doc %d\n"
+            "\n"
+            "Thanks!\n"
+            "%s\n"
+            "\n"
+            "On Mon, 5 Jan 2026, Bob wrote:\n"
+            "> quoted line one\n"
+            "> quoted line two\n"
+            ">> deeper quote\n"
+            "\n"
+            "-- \n"
+            "Alice\n"
+            "sig line\n" % (doc_id, text))
 
-    for pdf in it:
-        rows = []
-        for (doc_id, text) in zip(pdf["doc_id"], pdf["text"]):
-            (main, nq) = strip_email_reply(build(int(doc_id), text))
-            rows.append((int(doc_id), main, nq))
-        yield pd.DataFrame(rows,
-                           columns=["doc_id", "main_text",
-                                    "n_quoted_lines"])
+
+def _email_row(doc_id, text):
+    (main, nq) = strip_email_reply(_build_reply(doc_id, text))
+    return ([doc_id], [main], [nq])
 
 
 def email_quote_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -314,12 +300,10 @@ def email_quote_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     attribution line, three quoted-history lines, signature block) and
     require exactly ``Thanks! <text>`` back with the quoted-line count.
 
-    Scale: one map-side stage on the scan partitions."""
-    return (_docs(spark, sf_dir, parallel=True)
-            .select("doc_id", "text")
-            .mapInPandas(_email_batches,
-                         schema="doc_id long, main_text string, "
-                                "n_quoted_lines int"))
+    Scale: one map-side stage after the round-robin spread (``_docs``)."""
+    return map_rows(_docs(spark, sf_dir, parallel=True)
+                    .select("doc_id", "text"), _email_row,
+                    "doc_id long, main_text string, n_quoted_lines int")
 
 
 def tool_call_extract(spark: SparkSession, sf_dir: str) -> DataFrame:

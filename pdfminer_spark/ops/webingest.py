@@ -19,19 +19,22 @@ real DOM-density boilerplate stripper (``html/boilerplate.py``) — and
 must recover each document's exact main text (the extract_documents
 wrap/strip round-trip, one container level deeper).
 
-Scale: both queries are one map-side stage on the scan partitions
-(per-row independent work, no exchange). At 100 TB the same
-``mapInPandas`` body runs over binary WARC cells read straight from
-the lake; per-record memory is bounded by the declared Content-Length
-checked against the cell size before slicing.
+Scale: every Python operator here is a per-row function run by
+``spark/batches.map_rows``: a round-robin spread of the scan to the
+session parallelism (``_docs``), then one map-side stage (per-row
+independent work). At 100 TB the same per-row function runs over binary
+WARC cells read straight from the lake; per-record memory is bounded by
+the declared Content-Length checked against the cell size before
+slicing.
 """
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
+from html.parser import HTMLParser
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..spark.batches import map_rows
 from .textops import _docs
 
 _MAX_WARC_RECORDS = 1 << 20  # hostile-input ceiling per payload cell
@@ -136,21 +139,19 @@ def _build_warc(doc_id: int, text: str) -> bytes:
             + rec("response", "WARC-Target-URI: %s\r\n" % uri, http))
 
 
-def _records_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import hashlib
+def _warc_response(doc_id: int, text: str) -> tuple[list, dict, int, bytes]:
+    """(records, response record, HTTP status, body) of the document's
+    synthetic WARC, parsed back by the strict readers."""
+    recs = parse_warc(_build_warc(doc_id, text))
+    resp = [r for r in recs if r["type"] == "response"][0]
+    (status, _h, body) = parse_http_response(resp["block"])
+    return (recs, resp, status, body)
 
-    for pdf in it:
-        rows = []
-        for (doc_id, text) in zip(pdf["doc_id"], pdf["text"]):
-            recs = parse_warc(_build_warc(int(doc_id), text))
-            resp = [r for r in recs if r["type"] == "response"][0]
-            (status, _h, body) = parse_http_response(resp["block"])
-            rows.append((int(doc_id), len(recs), resp["uri"], status,
-                         len(body),
-                         hashlib.sha256(body).hexdigest()))
-        yield pd.DataFrame(rows, columns=[
-            "doc_id", "n_records", "uri", "status", "body_len",
-            "body_sha256"])
+
+def _record_row(doc_id, text):
+    (recs, resp, status, body) = _warc_response(doc_id, text)
+    return ([doc_id], [len(recs)], [resp["uri"]], [status], [len(body)],
+            [hashlib.sha256(body).hexdigest()])
 
 
 def warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -161,27 +162,18 @@ def warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the closed form (URI from doc_id, body = chrome wrap of the
     text) — any framing slip (Content-Length off by one, separator
     desync, header case) is a visible mismatch."""
-    return (_docs(spark, sf_dir, parallel=True)
-            .select("doc_id", "text")
-            .mapInPandas(_records_batches,
-                         schema=("doc_id long, n_records int, uri string,"
-                                 " status int, body_len int,"
-                                 " body_sha256 string")))
+    return map_rows(_docs(spark, sf_dir, parallel=True)
+                    .select("doc_id", "text"), _record_row,
+                    "doc_id long, n_records int, uri string, status int,"
+                    " body_len int, body_sha256 string")
 
 
-def _extract_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _extract_row(doc_id, text):
     from pdfminer_spark.html.boilerplate import extract_main_text
 
-    for pdf in it:
-        rows = []
-        for (doc_id, text) in zip(pdf["doc_id"], pdf["text"]):
-            recs = parse_warc(_build_warc(int(doc_id), text))
-            resp = [r for r in recs if r["type"] == "response"][0]
-            (status, _h, body) = parse_http_response(resp["block"])
-            main = extract_main_text(body.decode("utf-8"))
-            rows.append((int(doc_id), resp["uri"], status, main))
-        yield pd.DataFrame(rows, columns=[
-            "doc_id", "uri", "status", "main_text"])
+    (_recs, resp, status, body) = _warc_response(doc_id, text)
+    return ([doc_id], [resp["uri"]], [status],
+            [extract_main_text(body.decode("utf-8"))])
 
 
 def warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -192,11 +184,9 @@ def warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     must survive verbatim, so this row pins the stripper's behavior on
     the canonical wrap at every SF, one container level deeper than
     extract_documents."""
-    return (_docs(spark, sf_dir, parallel=True)
-            .select("doc_id", "text")
-            .mapInPandas(_extract_batches,
-                         schema=("doc_id long, uri string, status int,"
-                                 " main_text string")))
+    return map_rows(_docs(spark, sf_dir, parallel=True)
+                    .select("doc_id", "text"), _extract_row,
+                    "doc_id long, uri string, status int, main_text string")
 
 
 _MAX_ROBOTS_RULES = 10_000  # hostile-input ceiling per robots.txt
@@ -268,31 +258,28 @@ def robots_allowed(groups: dict[str, list], user_agent: str,
     return best is None or best[1] == "allow"
 
 
-def _robots_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    paths = ("/public/doc", "/private/doc", "/private/ok/doc",
-             "/doc.pdf", "/doc.pdfx")
+_ROBOTS_PATHS = ("/public/doc", "/private/doc", "/private/ok/doc",
+                 "/doc.pdf", "/doc.pdfx")
 
-    def build_robots(doc_id: int) -> str:
-        txt = ("# synthetic crawl policy\n"
-               "User-agent: *\n"
-               "Disallow: /private/\n"
-               "Allow: /private/ok/\n")
-        if doc_id % 2 == 1:
-            txt += "Disallow: /*.pdf$\n"
-        if doc_id % 3 == 0:
-            txt += ("\nUser-agent: trainingbot\n"
-                    "Disallow: /public/\n")
-        return txt
 
-    for pdf in it:
-        rows = []
-        for doc_id in pdf["doc_id"]:
-            did = int(doc_id)
-            groups = parse_robots(build_robots(did))
-            path = paths[did % 5]
-            rows.append((did, path,
-                         int(robots_allowed(groups, "TrainingBot", path))))
-        yield pd.DataFrame(rows, columns=["doc_id", "path", "allowed"])
+def _build_robots(doc_id: int) -> str:
+    txt = ("# synthetic crawl policy\n"
+           "User-agent: *\n"
+           "Disallow: /private/\n"
+           "Allow: /private/ok/\n")
+    if doc_id % 2 == 1:
+        txt += "Disallow: /*.pdf$\n"
+    if doc_id % 3 == 0:
+        txt += ("\nUser-agent: trainingbot\n"
+                "Disallow: /public/\n")
+    return txt
+
+
+def _robots_row(doc_id):
+    groups = parse_robots(_build_robots(doc_id))
+    path = _ROBOTS_PATHS[doc_id % 5]
+    return ([doc_id], [path],
+            [int(robots_allowed(groups, "TrainingBot", path))])
 
 
 def robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -305,13 +292,12 @@ def robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``*``, never merges), longest-match precedence, Allow tie-break,
     and the ``$`` anchor are all load-bearing in it.
 
-    Scale: one map-side stage on the scan partitions; in a real crawl
-    the parsed per-domain rule groups are a broadcast table keyed by
-    registered domain, probed map-side exactly like this."""
-    return (_docs(spark, sf_dir, parallel=True)
-            .select("doc_id")
-            .mapInPandas(_robots_batches,
-                         schema="doc_id long, path string, allowed int"))
+    Scale: one map-side stage after the round-robin spread (``_docs``);
+    in a real crawl the parsed per-domain rule groups are a broadcast
+    table keyed by registered domain, probed map-side exactly like
+    this."""
+    return map_rows(_docs(spark, sf_dir, parallel=True).select("doc_id"),
+                    _robots_row, "doc_id long, path string, allowed int")
 
 
 _MAX_SITEMAP_URLS = 50_000  # the sitemaps.org per-file limit
@@ -360,33 +346,28 @@ def parse_sitemap(xml_text: str,
 _SITEMAP_NS = "http://www.sitemaps.org/schemas/sitemap/0.9"
 
 
-def _sitemap_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    def build_sitemap(doc_id: int) -> str:
-        if doc_id % 4 == 0:  # index of child sitemaps
-            body = "".join(
-                "<sitemap><loc>https://example.org/sm/%d/%d.xml</loc>"
-                "</sitemap>" % (doc_id, k) for k in range(2))
-            return ('<?xml version="1.0" encoding="UTF-8"?>'
-                    '<sitemapindex xmlns="%s">%s</sitemapindex>'
-                    % (_SITEMAP_NS, body))
-        n = 1 + doc_id % 3
+def _build_sitemap(doc_id: int) -> str:
+    if doc_id % 4 == 0:  # index of child sitemaps
         body = "".join(
-            "<url><loc>https://example.org/p/%d/%d</loc>"
-            "<lastmod>2026-01-0%d</lastmod><priority>0.%d</priority>"
-            "</url>" % (doc_id, k, 1 + k, 5 + k) for k in range(n))
+            "<sitemap><loc>https://example.org/sm/%d/%d.xml</loc>"
+            "</sitemap>" % (doc_id, k) for k in range(2))
         return ('<?xml version="1.0" encoding="UTF-8"?>'
-                '<urlset xmlns="%s">%s</urlset>' % (_SITEMAP_NS, body))
+                '<sitemapindex xmlns="%s">%s</sitemapindex>'
+                % (_SITEMAP_NS, body))
+    n = 1 + doc_id % 3
+    body = "".join(
+        "<url><loc>https://example.org/p/%d/%d</loc>"
+        "<lastmod>2026-01-0%d</lastmod><priority>0.%d</priority>"
+        "</url>" % (doc_id, k, 1 + k, 5 + k) for k in range(n))
+    return ('<?xml version="1.0" encoding="UTF-8"?>'
+            '<urlset xmlns="%s">%s</urlset>' % (_SITEMAP_NS, body))
 
-    for pdf in it:
-        rows = []
-        for doc_id in pdf["doc_id"]:
-            did = int(doc_id)
-            sm = parse_sitemap(build_sitemap(did))
-            first = sm["entries"][0]
-            rows.append((did, sm["kind"], len(sm["entries"]),
-                         first["loc"], first["lastmod"]))
-        yield pd.DataFrame(rows, columns=[
-            "doc_id", "kind", "n_entries", "first_loc", "first_lastmod"])
+
+def _sitemap_row(doc_id):
+    sm = parse_sitemap(_build_sitemap(doc_id))
+    first = sm["entries"][0]
+    return ([doc_id], [sm["kind"]], [len(sm["entries"])], [first["loc"]],
+            [first["lastmod"]])
 
 
 def sitemap_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -397,51 +378,45 @@ def sitemap_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     kind, entry count, and the first entry's loc/lastmod. The oracle
     enumerates the closed forms.
 
-    Scale: one map-side stage on the scan partitions; real crawls fan
-    the per-domain sitemap fetches out the same way and explode the
-    entry lists afterward."""
-    return (_docs(spark, sf_dir, parallel=True)
-            .select("doc_id")
-            .mapInPandas(_sitemap_batches,
-                         schema=("doc_id long, kind string, "
-                                 "n_entries int, first_loc string, "
-                                 "first_lastmod string")))
+    Scale: one map-side stage after the round-robin spread (``_docs``);
+    real crawls fan the per-domain sitemap fetches out the same way and
+    explode the entry lists afterward."""
+    return map_rows(_docs(spark, sf_dir, parallel=True).select("doc_id"),
+                    _sitemap_row,
+                    "doc_id long, kind string, n_entries int,"
+                    " first_loc string, first_lastmod string")
 
 
-def _metadata_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _build_html(doc_id: int, text: str) -> str:
+    head = ["<head>"]
+    k = doc_id % 3
+    if k == 1:
+        # messy whitespace exercises the normalizer
+        head.append("<title>  Doc \n  %d  </title>" % doc_id)
+    if k == 0:
+        head.append('<meta property="og:title" content="OG Doc %d">'
+                    % doc_id)
+    if doc_id % 2 == 0:
+        head.append('<meta name="description" content="Desc %d">'
+                    % doc_id)
+    else:
+        head.append('<meta property="og:description" '
+                    'content="OGD %d">' % doc_id)
+    head.append('<link rel="canonical" '
+                'href="https://example.org/c/%d">' % doc_id)
+    head.append("</head>")
+    lang = ' lang="en"' if doc_id % 4 != 0 else ""
+    h1 = "<h1>Heading %d</h1>" % doc_id if k == 2 else ""
+    return ("<html%s>%s<body>%s<p>%s</p></body></html>"
+            % (lang, "".join(head), h1, text))
+
+
+def _metadata_row(doc_id, text):
     from pdfminer_spark.html.metadata import extract_metadata
 
-    def build_html(doc_id: int, text: str) -> str:
-        head = ["<head>"]
-        k = doc_id % 3
-        if k == 1:
-            # messy whitespace exercises the normalizer
-            head.append("<title>  Doc \n  %d  </title>" % doc_id)
-        if k == 0:
-            head.append('<meta property="og:title" content="OG Doc %d">'
-                        % doc_id)
-        if doc_id % 2 == 0:
-            head.append('<meta name="description" content="Desc %d">'
-                        % doc_id)
-        else:
-            head.append('<meta property="og:description" '
-                        'content="OGD %d">' % doc_id)
-        head.append('<link rel="canonical" '
-                    'href="https://example.org/c/%d">' % doc_id)
-        head.append("</head>")
-        lang = ' lang="en"' if doc_id % 4 != 0 else ""
-        h1 = "<h1>Heading %d</h1>" % doc_id if k == 2 else ""
-        return ("<html%s>%s<body>%s<p>%s</p></body></html>"
-                % (lang, "".join(head), h1, text))
-
-    for pdf in it:
-        rows = []
-        for (doc_id, text) in zip(pdf["doc_id"], pdf["text"]):
-            m = extract_metadata(build_html(int(doc_id), text))
-            rows.append((int(doc_id), m["title"], m["description"],
-                         m["canonical"], m["lang"]))
-        yield pd.DataFrame(rows, columns=[
-            "doc_id", "title", "description", "canonical", "lang"])
+    m = extract_metadata(_build_html(doc_id, text))
+    return ([doc_id], [m["title"]], [m["description"]], [m["canonical"]],
+            [m["lang"]])
 
 
 def html_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -453,13 +428,11 @@ def html_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``html/metadata.py``, emit the four fields. The oracle enumerates
     the fallback chains and the whitespace normalization in CASE form.
 
-    Scale: one map-side stage on the scan partitions."""
-    return (_docs(spark, sf_dir, parallel=True)
-            .select("doc_id", "text")
-            .mapInPandas(_metadata_batches,
-                         schema=("doc_id long, title string, "
-                                 "description string, canonical string, "
-                                 "lang string")))
+    Scale: one map-side stage after the round-robin spread (``_docs``)."""
+    return map_rows(_docs(spark, sf_dir, parallel=True)
+                    .select("doc_id", "text"), _metadata_row,
+                    "doc_id long, title string, description string,"
+                    " canonical string, lang string")
 
 
 _TEX_DROP_ARG = ("label", "cite", "ref", "usepackage", "documentclass",
@@ -525,24 +498,21 @@ def strip_markdown(s: str) -> str:
     return re.sub(r"\s+", " ", s).strip()
 
 
-def _markdown_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    def build_md(text: str) -> str:
-        words = text.split(" ")
-        marked = " ".join(
-            "**%s**" % w if i % 6 == 1 else w
-            for (i, w) in enumerate(words))
-        return ("# Title\n\n"
-                "Some *emphasized* intro with a [link](https://x/y) "
-                "and `inline code`.\n\n"
-                "- item one\n- item two\n\n"
-                "```python\ncode block line\n```\n\n"
-                "> quoted wisdom\n\n---\n\n" + marked + "\n")
+def _build_md(text: str) -> str:
+    words = text.split(" ")
+    marked = " ".join(
+        "**%s**" % w if i % 6 == 1 else w
+        for (i, w) in enumerate(words))
+    return ("# Title\n\n"
+            "Some *emphasized* intro with a [link](https://x/y) "
+            "and `inline code`.\n\n"
+            "- item one\n- item two\n\n"
+            "```python\ncode block line\n```\n\n"
+            "> quoted wisdom\n\n---\n\n" + marked + "\n")
 
-    for pdf in it:
-        rows = []
-        for (doc_id, text) in zip(pdf["doc_id"], pdf["text"]):
-            rows.append((int(doc_id), strip_markdown(build_md(text))))
-        yield pd.DataFrame(rows, columns=["doc_id", "stripped"])
+
+def _markdown_row(doc_id, text):
+    return ([doc_id], [strip_markdown(_build_md(text))])
 
 
 def markdown_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -552,34 +522,29 @@ def markdown_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     word strong-wrapped) and require the exact expected text back —
     markers gone, anchor/code/quote CONTENT intact.
 
-    Scale: one map-side stage on the scan partitions."""
-    return (_docs(spark, sf_dir, parallel=True)
-            .select("doc_id", "text")
-            .mapInPandas(_markdown_batches,
-                         schema="doc_id long, stripped string"))
+    Scale: one map-side stage after the round-robin spread (``_docs``)."""
+    return map_rows(_docs(spark, sf_dir, parallel=True)
+                    .select("doc_id", "text"), _markdown_row,
+                    "doc_id long, stripped string")
 
 
-def _latex_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    def build_tex(doc_id: int, text: str) -> str:
-        words = text.split(" ")
-        marked = " ".join(
-            "\\emph{%s}" % w if i % 5 == 2 else w
-            for (i, w) in enumerate(words))
-        return ("% synthetic arXiv-style source\n"
-                "\\documentclass{article}\n"
-                "\\usepackage{amsmath}\n"
-                "\\begin{document}\n"
-                "\\section{Introduction}\n"
-                "Let $x^2 + y_i$ hold. % trailing comment\n"
-                + marked + "\n\\label{sec:intro}\n"
-                "\\end{document}\n")
+def _build_tex(text: str) -> str:
+    words = text.split(" ")
+    marked = " ".join(
+        "\\emph{%s}" % w if i % 5 == 2 else w
+        for (i, w) in enumerate(words))
+    return ("% synthetic arXiv-style source\n"
+            "\\documentclass{article}\n"
+            "\\usepackage{amsmath}\n"
+            "\\begin{document}\n"
+            "\\section{Introduction}\n"
+            "Let $x^2 + y_i$ hold. % trailing comment\n"
+            + marked + "\n\\label{sec:intro}\n"
+            "\\end{document}\n")
 
-    for pdf in it:
-        rows = []
-        for (doc_id, text) in zip(pdf["doc_id"], pdf["text"]):
-            rows.append((int(doc_id),
-                         strip_latex(build_tex(int(doc_id), text))))
-        yield pd.DataFrame(rows, columns=["doc_id", "stripped"])
+
+def _latex_row(doc_id, text):
+    return ([doc_id], [strip_latex(_build_tex(text))])
 
 
 def latex_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -590,11 +555,10 @@ def latex_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly ``Introduction Let hold. <text>`` — preamble/comments/math/
     label gone, command-wrapped words intact.
 
-    Scale: one map-side stage on the scan partitions."""
-    return (_docs(spark, sf_dir, parallel=True)
-            .select("doc_id", "text")
-            .mapInPandas(_latex_batches,
-                         schema="doc_id long, stripped string"))
+    Scale: one map-side stage after the round-robin spread (``_docs``)."""
+    return map_rows(_docs(spark, sf_dir, parallel=True)
+                    .select("doc_id", "text"), _latex_row,
+                    "doc_id long, stripped string")
 
 
 def jsonl_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -695,39 +659,34 @@ def parse_feed(xml_text: str,
     return {"fmt": fmt, "entries": entries}
 
 
-def _feed_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    def build(doc_id: int) -> str:
-        n = 1 + doc_id % 3
-        if doc_id % 2 == 0:
-            items = "".join(
-                "<item><title>Item %d %d</title>"
-                "<link>https://example.org/f/%d/%d</link>"
-                "<guid>urn:%d:%d</guid>"
-                "<pubDate>Mon, 05 Jan 2026 00:00:0%d GMT</pubDate></item>"
-                % (doc_id, k, doc_id, k, doc_id, k, k) for k in range(n))
-            return ('<?xml version="1.0"?><rss version="2.0"><channel>'
-                    "<title>Feed %d</title>%s</channel></rss>"
-                    % (doc_id, items))
+def _build_feed(doc_id: int) -> str:
+    n = 1 + doc_id % 3
+    if doc_id % 2 == 0:
         items = "".join(
-            '<entry><title>Item %d %d</title>'
-            '<link rel="alternate" href="https://example.org/f/%d/%d"/>'
-            "<id>urn:%d:%d</id>"
-            "<updated>2026-01-05T00:00:0%dZ</updated></entry>"
+            "<item><title>Item %d %d</title>"
+            "<link>https://example.org/f/%d/%d</link>"
+            "<guid>urn:%d:%d</guid>"
+            "<pubDate>Mon, 05 Jan 2026 00:00:0%d GMT</pubDate></item>"
             % (doc_id, k, doc_id, k, doc_id, k, k) for k in range(n))
-        return ('<feed xmlns="http://www.w3.org/2005/Atom">'
-                "<title>Feed %d</title>%s</feed>" % (doc_id, items))
+        return ('<?xml version="1.0"?><rss version="2.0"><channel>'
+                "<title>Feed %d</title>%s</channel></rss>"
+                % (doc_id, items))
+    items = "".join(
+        '<entry><title>Item %d %d</title>'
+        '<link rel="alternate" href="https://example.org/f/%d/%d"/>'
+        "<id>urn:%d:%d</id>"
+        "<updated>2026-01-05T00:00:0%dZ</updated></entry>"
+        % (doc_id, k, doc_id, k, doc_id, k, k) for k in range(n))
+    return ('<feed xmlns="http://www.w3.org/2005/Atom">'
+            "<title>Feed %d</title>%s</feed>" % (doc_id, items))
 
-    for pdf in it:
-        rows = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            parsed = parse_feed(build(d))
-            for (k, e) in enumerate(parsed["entries"]):
-                rows.append((d, parsed["fmt"], k, e["title"], e["link"],
-                             e["entry_id"], e["updated"]))
-        yield pd.DataFrame(rows, columns=[
-            "doc_id", "fmt", "entry_idx", "title", "link", "entry_id",
-            "updated"])
+
+def _feed_rows(doc_id):
+    parsed = parse_feed(_build_feed(doc_id))
+    es = parsed["entries"]
+    return ([doc_id] * len(es), [parsed["fmt"]] * len(es), range(len(es)),
+            [e["title"] for e in es], [e["link"] for e in es],
+            [e["entry_id"] for e in es], [e["updated"] for e in es])
 
 
 def feed_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -738,37 +697,33 @@ def feed_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     including the RSS-text vs Atom-href link split and the
     guid-vs-id / pubDate-vs-updated fallbacks.
 
-    Scale: one map-side stage on the scan partitions."""
-    return (_docs(spark, sf_dir, parallel=True)
-            .select("doc_id")
-            .mapInPandas(
-                _feed_batches,
-                schema="doc_id long, fmt string, entry_idx int, "
-                       "title string, link string, entry_id string, "
-                       "updated string"))
+    Scale: one map-side stage after the round-robin spread (``_docs``)."""
+    return map_rows(_docs(spark, sf_dir, parallel=True).select("doc_id"),
+                    _feed_rows,
+                    "doc_id long, fmt string, entry_idx int, title string,"
+                    " link string, entry_id string, updated string")
 
 
-def _link_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _build_linked_page(src_id: int) -> str:
+    links = "".join(
+        '<p>see <a href="https://example.org/d/%d">a%d %d</a> ok</p>'
+        % (dst, src_id % 5, dst)
+        for dst in ((src_id + 7 * (k + 1)) % 500
+                    for k in range(1 + src_id % 3)))
+    return ('<html><body><nav><a href="/home">Home</a></nav>'
+            "<main>%s</main></body></html>" % links)
+
+
+def _link_rows(src):
     from pdfminer_spark.html.metadata import extract_links
 
-    def build(src_id: int) -> str:
-        links = "".join(
-            '<p>see <a href="https://example.org/d/%d">a%d %d</a> ok</p>'
-            % (dst, src_id % 5, dst)
-            for dst in ((src_id + 7 * (k + 1)) % 500
-                        for k in range(1 + src_id % 3)))
-        return ('<html><body><nav><a href="/home">Home</a></nav>'
-                "<main>%s</main></body></html>" % links)
-
-    for pdf in it:
-        rows = []
-        for doc_id in pdf["doc_id"]:
-            src = int(doc_id)
-            for (href, anchor) in extract_links(build(src)):
-                if not href.startswith("https://example.org/d/"):
-                    continue  # nav/footer chrome links stay out
-                rows.append((src, int(href.rsplit("/", 1)[-1]), anchor))
-        yield pd.DataFrame(rows, columns=["src", "dst", "anchor"])
+    # nav/footer chrome links stay out
+    links = [(href, anchor)
+             for (href, anchor) in extract_links(_build_linked_page(src))
+             if href.startswith("https://example.org/d/")]
+    return ([src] * len(links),
+            [int(href.rsplit("/", 1)[-1]) for (href, _a) in links],
+            [anchor for (_h, anchor) in links])
 
 
 def link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -781,12 +736,11 @@ def link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     — nested-tag text, document order), and per-target in-degree and
     anchor-text stats aggregate distributively.
 
-    Scale: map-side parse on the scan partitions, then ONE
+    Scale: map-side parse after the round-robin spread (``_docs``), then ONE
     map-side-combined exchange keyed by dst — the edge-list shape
     pagerank consumes; never a driver-side graph."""
     d = _docs(spark, sf_dir, parallel=True).select("doc_id")
-    edges = d.mapInPandas(
-        _link_batches, schema="src long, dst long, anchor string")
+    edges = map_rows(d, _link_rows, "src long, dst long, anchor string")
     from pyspark.sql import functions as F
 
     return (edges.groupBy("dst")
@@ -796,80 +750,78 @@ def link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.max("anchor").alias("max_anchor")))
 
 
-def _table_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from html.parser import HTMLParser
+class _TableParser(HTMLParser):
+    """Collect (row_idx, col_idx, is_header, text) cells of the
+    FIRST <table>; nested inline tags contribute their text."""
 
-    class _TableParser(HTMLParser):
-        """Collect (row_idx, col_idx, is_header, text) cells of the
-        FIRST <table>; nested inline tags contribute their text."""
+    def __init__(self) -> None:
+        super().__init__(convert_charrefs=True)
+        self.cells: list[tuple[int, int, int, str]] = []
+        self._row = -1
+        self._col = -1
+        self._in_cell = False
+        self._header = 0
+        self._parts: list[str] = []
+        self._done = False
+        self._depth = 0
 
-        def __init__(self) -> None:
-            super().__init__(convert_charrefs=True)
-            self.cells: list[tuple[int, int, int, str]] = []
-            self._row = -1
-            self._col = -1
+    def handle_starttag(self, tag, attrs):
+        if self._done:
+            return
+        if tag == "table":
+            self._depth += 1
+        elif self._depth == 1:
+            if tag == "tr":
+                self._row += 1
+                self._col = -1
+            elif tag in ("td", "th"):
+                self._col += 1
+                self._in_cell = True
+                self._header = 1 if tag == "th" else 0
+                self._parts = []
+
+    def handle_endtag(self, tag):
+        if tag in ("td", "th") and self._in_cell:
+            import re as _re
+
+            text = _re.sub(r"\s+", " ",
+                           "".join(self._parts)).strip()
+            self.cells.append(
+                (self._row, self._col, self._header, text))
             self._in_cell = False
-            self._header = 0
-            self._parts: list[str] = []
-            self._done = False
-            self._depth = 0
+        elif tag == "table" and self._depth:
+            self._depth -= 1
+            if self._depth == 0:
+                self._done = True
 
-        def handle_starttag(self, tag, attrs):
-            if self._done:
-                return
-            if tag == "table":
-                self._depth += 1
-            elif self._depth == 1:
-                if tag == "tr":
-                    self._row += 1
-                    self._col = -1
-                elif tag in ("td", "th"):
-                    self._col += 1
-                    self._in_cell = True
-                    self._header = 1 if tag == "th" else 0
-                    self._parts = []
+    def handle_data(self, data):
+        if self._in_cell:
+            self._parts.append(data)
 
-        def handle_endtag(self, tag):
-            if tag in ("td", "th") and self._in_cell:
-                import re as _re
 
-                text = _re.sub(r"\s+", " ",
-                               "".join(self._parts)).strip()
-                self.cells.append(
-                    (self._row, self._col, self._header, text))
-                self._in_cell = False
-            elif tag == "table" and self._depth:
-                self._depth -= 1
-                if self._depth == 0:
-                    self._done = True
+def _build_table_page(doc_id: int) -> str:
+    rows = 2 + doc_id % 3
+    cols = 2 + doc_id % 2
+    head = "".join("<th>h%d</th>" % j for j in range(cols))
+    body = "".join(
+        "<tr>" + "".join(
+            "<td>r%dc%d <b>%d</b></td>" % (i, j, doc_id)
+            for j in range(cols)) + "</tr>"
+        for i in range(rows))
+    return ("<html><body><p>chrome</p><table><tr>%s</tr>%s</table>"
+            "<table><tr><td>second table ignored</td></tr></table>"
+            "</body></html>" % (head, body))
 
-        def handle_data(self, data):
-            if self._in_cell:
-                self._parts.append(data)
 
-    def build(doc_id: int) -> str:
-        rows = 2 + doc_id % 3
-        cols = 2 + doc_id % 2
-        head = "".join("<th>h%d</th>" % j for j in range(cols))
-        body = "".join(
-            "<tr>" + "".join(
-                "<td>r%dc%d <b>%d</b></td>" % (i, j, doc_id)
-                for j in range(cols)) + "</tr>"
-            for i in range(rows))
-        return ("<html><body><p>chrome</p><table><tr>%s</tr>%s</table>"
-                "<table><tr><td>second table ignored</td></tr></table>"
-                "</body></html>" % (head, body))
+_TABLE_DDL = ("doc_id long, row_idx int, col_idx int, is_header int,"
+              " cell string")
 
-    for pdf in it:
-        rows = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            p = _TableParser()
-            p.feed(build(d))
-            for (r, c, h, t) in p.cells:
-                rows.append((d, r, c, h, t))
-        yield pd.DataFrame(rows, columns=[
-            "doc_id", "row_idx", "col_idx", "is_header", "cell"])
+
+def _table_rows(doc_id):
+    p = _TableParser()
+    p.feed(_build_table_page(doc_id))
+    return ([doc_id] * len(p.cells),
+            *([cell[k] for cell in p.cells] for k in range(4)))
 
 
 def dom_table_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -881,13 +833,9 @@ def dom_table_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     real HTMLParser-based walker must recover every cell's (row, col,
     header flag, de-tagged text).
 
-    Scale: one map-side stage on the scan partitions."""
-    return (_docs(spark, sf_dir, parallel=True)
-            .select("doc_id")
-            .mapInPandas(
-                _table_batches,
-                schema="doc_id long, row_idx int, col_idx int, "
-                       "is_header int, cell string"))
+    Scale: one map-side stage after the round-robin spread (``_docs``)."""
+    return map_rows(_docs(spark, sf_dir, parallel=True).select("doc_id"),
+                    _table_rows, _TABLE_DDL)
 
 
 _FM_RE = None  # front matter is line-structured; no regex needed
@@ -912,26 +860,19 @@ def parse_front_matter(text: str) -> tuple[dict, str]:
     return (fields, text[end + 5:])
 
 
-def _fm_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    def build(doc_id: int, text: str) -> str:
-        return ("---\n"
-                "title: Doc %d\n"
-                "tags: a%d\n"
-                "draft: %s\n"
-                "---\n%s" % (doc_id, doc_id % 3,
-                              "true" if doc_id % 2 else "false", text))
+def _build_front_matter(doc_id: int, text: str) -> str:
+    return ("---\n"
+            "title: Doc %d\n"
+            "tags: a%d\n"
+            "draft: %s\n"
+            "---\n%s" % (doc_id, doc_id % 3,
+                          "true" if doc_id % 2 else "false", text))
 
-    for pdf in it:
-        rows = []
-        for (doc_id, text) in zip(pdf["doc_id"], pdf["text"]):
-            d = int(doc_id)
-            (fm, body) = parse_front_matter(build(d, text))
-            rows.append((d, len(fm), fm.get("title", ""),
-                         fm.get("tags", ""), fm.get("draft", ""),
-                         int(body == text)))
-        yield pd.DataFrame(rows, columns=[
-            "doc_id", "n_keys", "title", "tags", "draft",
-            "body_roundtrip"])
+
+def _front_matter_row(doc_id, text):
+    (fm, body) = parse_front_matter(_build_front_matter(doc_id, text))
+    return ([doc_id], [len(fm)], [fm.get("title", "")], [fm.get("tags", "")],
+            [fm.get("draft", "")], [int(body == text)])
 
 
 def frontmatter_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -940,13 +881,11 @@ def frontmatter_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     key:value block; the parser must recover every field and the exact
     body.
 
-    Scale: one map-side stage on the scan partitions."""
-    return (_docs(spark, sf_dir, parallel=True)
-            .select("doc_id", "text")
-            .mapInPandas(
-                _fm_batches,
-                schema="doc_id long, n_keys int, title string, "
-                       "tags string, draft string, body_roundtrip int"))
+    Scale: one map-side stage after the round-robin spread (``_docs``)."""
+    return map_rows(_docs(spark, sf_dir, parallel=True)
+                    .select("doc_id", "text"), _front_matter_row,
+                    "doc_id long, n_keys int, title string, tags string,"
+                    " draft string, body_roundtrip int")
 
 
 ORACLES: dict[str, str] = {

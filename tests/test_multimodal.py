@@ -155,11 +155,12 @@ def test_non_media_payload_takes_fake_path():
 
 
 def test_spark_features_over_real_payloads(spark, tmp_path):
-    """End-to-end mapInPandas over a mixed table: real BMP + real WAV +
+    """End-to-end map_rows over a mixed table: real BMP + real WAV +
     opaque text, one Arrow batch. Width/height/frames must be the TRUE
     decoded values for the real payloads and the fake's for the text."""
     from pdfminer_spark.ops.multimodal import (FEATURES_SCHEMA,
-                                               _feature_batches)
+                                               _feature_row, _hist_vector)
+    from pdfminer_spark.spark.batches import map_rows
 
     bmp, wav, txt = make_bmp(7, 4), make_wav(320, rate=1600), b"hello world"
     pdf = pd.DataFrame({
@@ -169,8 +170,8 @@ def test_spark_features_over_real_payloads(spark, tmp_path):
     })
     df = spark.createDataFrame(pdf)
     out = {r["doc_id"]: r
-           for r in df.mapInPandas(_feature_batches(vector=True),
-                                   schema=FEATURES_SCHEMA).collect()}
+           for r in map_rows(df, _feature_row(_hist_vector),
+                             FEATURES_SCHEMA).collect()}
     assert (out[0]["width"], out[0]["height"], out[0]["frames"]) == (7, 4, 1)
     assert (out[1]["width"], out[1]["height"], out[1]["frames"]) == (0, 0, 320)
     fake = _fake_decode(txt, "image")

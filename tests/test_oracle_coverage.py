@@ -4,8 +4,17 @@ coverage. Every name in ``__spark_entry__.queries()`` must carry an
 would get only the weaker rows-only check, and round 3's 5 missing
 CORRECTNESS rows came exactly from that daylight. An explicit allowlist
 makes any intentional future exception reviewable instead of silent.
+
+The file also holds the one Spark-vs-DuckDB comparison the tests share
+(``_oracle_diff``, through ``tools/oracle_check.compare_frames``) and
+runs it over the per-row ``spark/batches.map_rows`` operators.
 """
+import os
+
+import pytest
+
 import __spark_entry__ as entry
+from tests.conftest import SF_DIR
 
 # names intentionally exempt from the SQL oracle (must stay empty unless
 # a genuinely non-SQL-expressible op lands; document why when it does)
@@ -113,3 +122,60 @@ def test_strict_comparator_catches_hugeint_float_drift():
     cast = con.execute("SELECT SUM(1)::BIGINT AS n FROM RANGE(3)").fetchdf()
     r2 = oc.compare_frames(spark_like, cast)
     assert r2["values_match"] and r2["kinds_match"] and r2["hash_match"]
+
+
+def _oracle_diff(spark, name: str, sf_dir: str):
+    """(spark frame, compare_frames result) of the registered query
+    ``name`` against its DuckDB oracle over ``sf_dir``'s tables (every
+    ``TABLES`` view whose parquet file is there)."""
+    import duckdb
+
+    oc = _oracle_check_mod()
+    got = entry.queries()[name](spark, sf_dir)
+    with duckdb.connect() as con:
+        for t in oc.TABLES:
+            path = os.path.join(sf_dir, f"{t}.parquet")
+            if os.path.exists(path):
+                con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                            f"read_parquet('{path}')")
+        want = con.execute(entry.oracle_sql()[name]).fetchdf()
+    return got, oc.compare_frames(got.toPandas(), want)
+
+
+def _assert_match(name: str, r: dict) -> None:
+    ok = all(r[k] for k in ("rows_match", "schema_match", "values_match",
+                            "kinds_match", "hash_match"))
+    assert ok, (name, {k: v for k, v in r.items() if k != "detail"},
+                r["detail"])
+
+
+# the registered operators whose Python work is a per-row function run
+# by spark/batches.map_rows (the textops kernel operators are covered
+# in tests/test_textops.py)
+_MAP_ROWS_OPS = [
+    # ops/webingest.py
+    "warc_records", "warc_extract", "robots_filter", "html_metadata",
+    "sitemap_urls", "markdown_strip", "latex_strip", "feed_entries",
+    "link_graph", "dom_table_extract", "frontmatter_extract",
+    # ops/multimodal.py
+    "media_features", "media_resize", "media_frame_sample",
+    "media_decode_png", "media_decode_gif", "media_decode_tiff",
+    "media_decode_avi", "media_mp3_meta", "audio_zcr_features",
+    "image_dhash", "media_avi_frame_sample",
+    # ops/datasetops.py
+    "payload_decompress", "encoding_repair", "unicode_normalize",
+    # ops/archives.py
+    "zip_members", "docx_extract",
+    # ops/transcripts.py
+    "subtitle_cues", "email_quote_strip",
+    # ops/layoutops.py
+    "layout_boxes",
+]
+
+
+@pytest.mark.parametrize("name", _MAP_ROWS_OPS)
+def test_map_rows_ops_match_oracle(spark, name):
+    """Each per-row operator equals its DuckDB oracle (rows, schema,
+    values, dtype kinds, exact value hash) on the sf corpus."""
+    (_, r) = _oracle_diff(spark, name, SF_DIR)
+    _assert_match(name, r)

@@ -210,11 +210,12 @@ def test_ivf_partial_table_triggers_retrain_and_prune(spark, tmp_path,
 def test_cosine_topk_matches_oracle_without_a_query_vector(spark, tmp_path,
                                                            query):
     """A vec_id=0 row whose embedding is NULL makes every cosine NULL:
-    the oracle still returns 25 rows, vec_ids 1-25. Without the row the
-    result is empty."""
+    each top-k operator still equals its oracle, and ann_cosine_topk
+    returns 25 rows, vec_ids 1-25. Without the row the result is
+    empty."""
     import duckdb
 
-    from pdfminer_spark.ops.similarity import ORACLES, ann_cosine_topk
+    from pdfminer_spark.ops.similarity import ORACLES, QUERIES
 
     rng = np.random.default_rng(3)
     df = pd.DataFrame({
@@ -228,13 +229,15 @@ def test_cosine_topk_matches_oracle_without_a_query_vector(spark, tmp_path,
     else:
         df.at[0, "embedding"] = None
     df.to_parquet(tmp_path / "embeddings.parquet")
-    got = [tuple(r) for r in ann_cosine_topk(spark, str(tmp_path)).collect()]
     con = duckdb.connect()
     con.execute("CREATE VIEW embeddings AS SELECT * FROM "
                 f"read_parquet('{tmp_path}/embeddings.parquet')")
-    assert got == con.execute(ORACLES["ann_cosine_topk"]).fetchall()
-    assert got == ([(i, None) for i in range(1, 26)]
-                   if query == "null_embedding" else [])
+    for op in ("ann_cosine_topk", "ann_ivf_topk"):
+        got = [tuple(r) for r in QUERIES[op](spark, str(tmp_path)).collect()]
+        assert got == con.execute(ORACLES[op]).fetchall(), op
+        if op == "ann_cosine_topk":
+            assert got == ([(i, None) for i in range(1, 26)]
+                           if query == "null_embedding" else [])
 
 
 def test_semantic_dedup_drops_within_cell_keep_first(spark, tmp_path):

@@ -6,6 +6,7 @@ import os
 import pytest
 
 from tests.conftest import SF_DIR
+from tests.test_oracle_coverage import _assert_match, _oracle_diff
 
 
 @pytest.fixture(scope="module")
@@ -59,30 +60,6 @@ _KERNEL_OPS = {
     "substring_dup_pairs": "struct<id_a:bigint,id_b:bigint,"
                            "n_shared_windows:bigint>",
 }
-
-
-def _oracle_diff(spark, name: str, sf_dir: str):
-    """(spark frame, compare_frames result) of ``name`` against its
-    DuckDB oracle over ``sf_dir``'s documents table."""
-    import duckdb
-
-    from pdfminer_spark.ops.textops import ORACLES, QUERIES
-    from tests.test_oracle_coverage import _oracle_check_mod
-
-    got = QUERIES[name](spark, sf_dir)
-    with duckdb.connect() as con:
-        con.execute("CREATE VIEW documents AS SELECT * FROM "
-                    "read_parquet('%s')"
-                    % os.path.join(sf_dir, "documents.parquet"))
-        want = con.execute(ORACLES[name]).fetchdf()
-    return got, _oracle_check_mod().compare_frames(got.toPandas(), want)
-
-
-def _assert_match(name: str, r: dict) -> None:
-    ok = all(r[k] for k in ("rows_match", "schema_match", "values_match",
-                            "kinds_match", "hash_match"))
-    assert ok, (name, {k: v for k, v in r.items() if k != "detail"},
-                r["detail"])
 
 
 def test_md5_64_reads_the_engines_md5_hex():

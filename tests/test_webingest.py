@@ -334,12 +334,14 @@ def test_parse_front_matter_edges():
     assert parse_front_matter(raw) == ({}, raw)
 
 
-def test_table_parser_second_table_and_nesting():
+def test_table_parser_second_table_and_nesting(spark):
     import pandas as pd
 
-    from pdfminer_spark.ops.webingest import _table_batches
+    from pdfminer_spark.ops.webingest import _TABLE_DDL, _table_rows
+    from pdfminer_spark.spark.batches import map_rows
 
-    out = list(_table_batches(iter([pd.DataFrame({"doc_id": [6]})])))[0]
+    df = spark.createDataFrame(pd.DataFrame({"doc_id": [6]}))
+    out = map_rows(df, _table_rows, _TABLE_DDL).toPandas()
     # doc 6: 2+6%3=2 body rows, 2+6%2=2 cols, + 1 header row
     assert len(out) == (1 + 2) * 2
     assert set(out[out.is_header == 1].cell) == {"h0", "h1"}
