@@ -11,6 +11,12 @@ checkpoint) are anti-joined away. On Iceberg deployments point --input at
 the table path and swap the writes in pdfminer_spark/spark/lineage.py for
 ``writeTo(...).overwritePartitions()`` — layout and commit order are
 identical.
+
+The session carries ``session_conf()`` (Arrow batch caps, UTC), the recipe
+the tests and benchmarks run; it takes master, shuffle partitions and
+memory from spark-submit. It runs Spark's stock Python worker daemon, not
+``get_spark``'s: that daemon must import before the ``--py-files`` zip is
+on a worker's path.
 """
 from __future__ import annotations
 
@@ -30,8 +36,10 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from pdfminer_spark.spark.lineage import run_extraction
+    from pdfminer_spark.spark.session import session_conf
 
-    spark = SparkSession.builder.appName("pdfminer-spark-extract").getOrCreate()
+    spark = (SparkSession.builder.appName("pdfminer-spark-extract")
+             .config(map=session_conf()).getOrCreate())
     transcripts = spark.read.parquet(args.input)
     stats = run_extraction(
         spark, transcripts, args.output, args.run_id,

@@ -92,7 +92,9 @@ def interval_self_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     qualifying pair matches exactly once: the later side has a single
     bucket value, the earlier side's two explode values are distinct,
     and exactly one of them equals the later bucket. Join output stays
-    proportional to true matches instead of to per-user-count squared."""
+    proportional to true matches instead of to per-user-count squared.
+    An event id repeated with different timestamps pairs with other ids
+    only, as in the oracle's ``a.event_id < b.event_id``."""
     ev = _t(spark, sf_dir, "events").select(
         "user_id", "event_id",
         F.unix_millis(F.col("ts").cast("timestamp_ltz")).alias("ts_ms"))
@@ -109,7 +111,8 @@ def interval_self_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                   & (F.col("id_e") < F.col("id_l"))))
     return (
         a.join(b, ["user_id", "bkt"])
-        .where(earlier & (F.col("ts_l") - F.col("ts_e") <= 300000))
+        .where(earlier & (F.col("id_e") != F.col("id_l"))
+               & (F.col("ts_l") - F.col("ts_e") <= 300000))
         .select(
             "user_id",
             F.least("id_e", "id_l").alias("event_a"),

@@ -12,7 +12,9 @@ at 10^12-turn scale a job must resume mid-run. Design:
   table: (run_id, pk, conv_id_min/max, turn_count, bytes_decoded, checksum,
   ts). checksum is content-derived (bit_xor of per-row xxhash64), so a
   resume can verify prior buckets without recomputing them;
-- resume = LEFT ANTI JOIN of the input's pk against completed lineage pks.
+- resume = anti-join of the input's pk against the completed lineage pks,
+  collected once (at most num_buckets rows) and applied as a NOT IN
+  filter; the same rows give the run's bucket counters.
 
 On a real deployment both tables are Iceberg (``writeTo(...).append()`` /
 ``overwritePartitions()``); plain parquet here carries the same layout and
@@ -37,14 +39,15 @@ def with_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
     )
 
 
-def completed_buckets(spark: SparkSession, lineage_path: str) -> DataFrame | None:
+def completed_buckets(spark: SparkSession, lineage_path: str) -> list:
+    """The committed (run_id, pk) lineage rows, at most one per bucket."""
     if not os.path.exists(lineage_path):
-        return None
+        return []
     try:
         lineage = spark.read.parquet(lineage_path)
     except Exception:
-        return None
-    return lineage.select("pk").distinct()
+        return []
+    return lineage.select("run_id", "pk").collect()
 
 
 def lineage_of(extracted_with_pk: DataFrame, run_id: str) -> DataFrame:
@@ -81,10 +84,9 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame, out_dir: str,
     lineage_path = os.path.join(out_dir, "lineage")
     src = with_bucket(transcripts, num_buckets)
     done = completed_buckets(spark, lineage_path)
-    n_done = 0
-    if done is not None:
-        n_done = done.count()
-        src = src.join(F.broadcast(done), "pk", "left_anti")
+    done_pks = {r.pk for r in done}
+    if done_pks:
+        src = src.filter(~F.col("pk").isin(sorted(done_pks)))
     # the outstanding bucket list is tiny (<= num_buckets ints) and known
     # before extraction; collecting it lets the post-commit read-back
     # partition-prune to just-written pk= directories instead of
@@ -113,10 +115,11 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame, out_dir: str,
                 .filter(F.col("pk").isin(todo_pks)))
     lineage = lineage_of(this_run, run_id)
     lineage.write.mode("append").parquet(lineage_path)
-    n_processed = (spark.read.parquet(lineage_path)
-                   .filter(F.col("run_id") == run_id)
-                   .select("pk").distinct().count())
-    return {"processed_buckets": int(n_processed), "skipped_buckets": int(n_done)}
+    # this run-id's buckets: those it committed before (a resumed run-id)
+    # plus the ones just committed
+    processed = {r.pk for r in done if r.run_id == run_id} | set(todo_pks)
+    return {"processed_buckets": len(processed),
+            "skipped_buckets": len(done_pks)}
 
 
 def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -180,19 +180,33 @@ def test_pdf_decode_runs_after_the_shuffle(spark):
 def test_lineage_resume(spark, tmp_path):
     out_dir = str(tmp_path / "run")
     df = build_transcripts(spark, n_convs=N_CONVS)
-    r1 = run_extraction(spark, df, out_dir, "run-a", num_buckets=8,
-                        page_numbers=[0], fail_after_buckets=3)
-    assert r1["processed_buckets"] == 3
-    r2 = run_extraction(spark, df, out_dir, "run-b", num_buckets=8,
-                        page_numbers=[0])
-    assert r2["skipped_buckets"] == 3
+    sc = spark.sparkContext
+    jobs = {}
+
+    def run(run_id, **kw):
+        """run_extraction under a job group; records the jobs it started."""
+        sc.setJobGroup(run_id, run_id)
+        try:
+            return run_extraction(spark, df, out_dir, run_id, num_buckets=8,
+                                  page_numbers=[0], **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs[run_id] = len(sc.statusTracker().getJobIdsForGroup(run_id))
+
+    r1 = run("run-a", fail_after_buckets=3)
+    assert r1 == {"processed_buckets": 3, "skipped_buckets": 0}
+    r2 = run("run-b")
+    assert r2 == {"processed_buckets": 5, "skipped_buckets": 3}
     ext = read_extracted(spark, out_dir)
     assert ext.count() == df.count()
     dups = (ext.groupBy("conv_id", "turn_idx").count()
             .filter("count > 1").count())
     assert dups == 0
     # idempotent full rerun
-    r3 = run_extraction(spark, df, out_dir, "run-c", num_buckets=8,
-                        page_numbers=[0])
-    assert r3["processed_buckets"] == 0
+    r3 = run("run-c")
+    assert r3 == {"processed_buckets": 0, "skipped_buckets": 8}
     assert read_extracted(spark, out_dir).count() == df.count()
+    # each call reads the lineage table once; job counts measured on
+    # Spark 4.1.2 with 8 shuffle partitions
+    bound = {"run-a": 9, "run-b": 11, "run-c": 7}
+    assert all(jobs[r] <= bound[r] for r in bound), jobs

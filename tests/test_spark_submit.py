@@ -4,6 +4,7 @@
 the same command resumes from the lineage checkpoint instead of
 re-extracting.
 """
+import json
 import os
 import subprocess
 import sys
@@ -11,6 +12,7 @@ import sys
 import pandas as pd
 import pytest
 
+from pdfminer_spark.spark.session import session_conf
 from tests.conftest import REPO
 
 SPARK_SUBMIT = "/opt/spark/bin/spark-submit"
@@ -39,8 +41,14 @@ def test_spark_submit_pyfiles_job_runs_and_resumes(tmp_path):
 
     env = dict(os.environ)
     env.pop("PYTHONPATH", None)  # the zip must be the only code source
+    events = tmp_path / "events"
+    events.mkdir()
     cmd = [SPARK_SUBMIT, "--master", "local[2]",
            "--conf", "spark.sql.shuffle.partitions=4",
+           "--conf", "spark.eventLog.enabled=true",
+           "--conf", "spark.eventLog.compress=false",
+           "--conf", "spark.eventLog.rolling.enabled=false",
+           "--conf", "spark.eventLog.dir=" + events.as_uri(),
            "--py-files", zip_path,
            os.path.join(REPO, "jobs", "extract_job.py"),
            "--input", str(inp), "--output", str(out),
@@ -49,6 +57,15 @@ def test_spark_submit_pyfiles_job_runs_and_resumes(tmp_path):
                         capture_output=True, text=True, timeout=420)
     assert r1.returncode == 0, r1.stderr[-3000:]
     assert "run complete:" in r1.stdout
+
+    # the job's session runs the library's recipe, and the submitter's
+    # --conf still sets what the recipe leaves to the deployment
+    (log,) = events.iterdir()
+    env_update = next(e for e in map(json.loads, log.read_text().splitlines())
+                      if e["Event"] == "SparkListenerEnvironmentUpdate")
+    props = env_update["Spark Properties"]
+    want = {**session_conf(), "spark.sql.shuffle.partitions": "4"}
+    assert {k: props.get(k) for k in want} == want
 
     extracted = pd.read_parquet(out / "extracted")
     assert len(extracted) == 40
@@ -61,6 +78,7 @@ def test_spark_submit_pyfiles_job_runs_and_resumes(tmp_path):
                         capture_output=True, text=True, timeout=420)
     assert r2.returncode == 0, r2.stderr[-3000:]
     assert "'skipped_buckets': 8" in r2.stdout, r2.stdout[-2000:]
+    assert "'processed_buckets': 8" in r2.stdout, r2.stdout[-2000:]
     assert len(pd.read_parquet(out / "extracted")) == 40  # no dups
     lineage = pd.read_parquet(out / "lineage")
     assert lineage["pk"].nunique() == 8

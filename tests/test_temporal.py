@@ -90,8 +90,10 @@ def test_interval_self_join_bucket_boundaries(spark, tmp_path):
     """r8: the banded interval join explodes only the time-EARLIER side
     to {bucket, bucket+1}. Pin the boundary semantics against brute
     force: gaps of exactly 300s (kept) and 300.001s (dropped),
-    cross-bucket pairs, equal timestamps, and a pair whose LARGER
-    event_id is the earlier event (the re-orientation case)."""
+    cross-bucket pairs, equal timestamps, a pair whose LARGER
+    event_id is the earlier event (the re-orientation case), and an
+    event_id repeated with different timestamps (never paired with
+    itself)."""
     import itertools
 
     from pdfminer_spark.ops.relational import interval_self_join
@@ -108,6 +110,10 @@ def test_interval_self_join_bucket_boundaries(spark, tmp_path):
         (5, base + 100_000_000, 2, "a", 0.0),
         (9, base + 150_000_000, 2, "a", 0.0),   # earlier than id 7
         (7, base + 400_000_000, 2, "a", 0.0),   # dt to e9 = 250s, id 7 > 9? no: 7 < 9 -> reorient
+        # u3: id 10 twice, 100s apart, with id 11 between them
+        (10, base + 700_000_000, 3, "a", 0.0),
+        (10, base + 800_000_000, 3, "a", 0.0),
+        (11, base + 750_000_000, 3, "a", 0.0),
     ]
     sf = _events(spark, tmp_path, [(i, pd_ts(t), u, e, v)
                                    for (i, t, u, e, v) in rows])
@@ -117,7 +123,7 @@ def test_interval_self_join_bucket_boundaries(spark, tmp_path):
     exp = set()
     for ((ia, ta, ua), (ib, tb, ub)) in itertools.combinations(
             sorted((i, t // 1000, u) for (i, t, u, _e, _v) in rows), 2):
-        if ua == ub and abs(ta - tb) <= 300_000:
+        if ua == ub and ia < ib and abs(ta - tb) <= 300_000:
             exp.add((ua, ia, ib, tb - ta))
     assert got == exp and len(exp) >= 4
 

@@ -36,7 +36,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SIZES = [int(s) for s in os.environ.get(
     "SPARK_GRAFT_EXCAP_SIZES", "4000,40000").split(",")]
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-ARROW_BATCH = 64  # get_spark default; asserted against observed batches
 
 
 def _proc_kb(field: str) -> int:
@@ -99,8 +98,9 @@ def run(spark, n_turns: int) -> dict:
             .collect())
     parts = [r.asDict() for r in tele if r["rows"] > 0]
     max_batch = max(r["max_batch_rows"] for r in parts)
-    assert max_batch <= ARROW_BATCH, \
-        f"Arrow batch bound violated: {max_batch} > {ARROW_BATCH}"
+    bound = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    assert max_batch <= bound, \
+        f"Arrow batch bound violated: {max_batch} > {bound}"
     return {
         "n_turns": n_turns,
         "rows_out": n,
@@ -109,7 +109,7 @@ def run(spark, n_turns: int) -> dict:
         "partitions": len(parts),
         "max_part_rows": max(r["rows"] for r in parts),
         "max_batch_rows": max_batch,
-        "arrow_batch_bound": ARROW_BATCH,
+        "arrow_batch_bound": bound,
         "worker_peak_rss_mb": round(max(r["vm_hwm_kb"] for r in parts) / 1024),
         "worker_end_rss_mb": round(max(r["vm_rss_kb"] for r in parts) / 1024),
     }
