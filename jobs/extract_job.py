@@ -16,7 +16,10 @@ The session carries ``session_conf()`` (Arrow batch caps, UTC), the recipe
 the tests and benchmarks run; it takes master, shuffle partitions and
 memory from spark-submit. It runs Spark's stock Python worker daemon, not
 ``get_spark``'s: that daemon must import before the ``--py-files`` zip is
-on a worker's path.
+on a worker's path. So every daemon start here still compiles pyspark and
+py4j from Spark's source zips, and every task re-reads ``pyspark.zip``'s
+directory; ``pdfminer_spark/spark/daemon.py`` removes both for
+``get_spark`` sessions.
 """
 from __future__ import annotations
 

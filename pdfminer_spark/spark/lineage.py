@@ -14,7 +14,8 @@ at 10^12-turn scale a job must resume mid-run. Design:
   resume can verify prior buckets without recomputing them;
 - resume = anti-join of the input's pk against the completed lineage pks,
   collected once (at most num_buckets rows) and applied as a NOT IN
-  filter; the same rows give the run's bucket counters.
+  filter; the same rows give the run's bucket counters, and a resume with
+  no outstanding bucket returns them without extracting or writing.
 
 On a real deployment both tables are Iceberg (``writeTo(...).append()`` /
 ``overwritePartitions()``); plain parquet here carries the same layout and
@@ -26,11 +27,17 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .pipeline import extract_transcripts
+from .pipeline import EXTRACTED_SCHEMA, extract_transcripts
 
 LINEAGE_COLS = ["run_id", "pk", "conv_id_min", "conv_id_max", "turn_count",
                 "bytes_decoded", "checksum", "ts"]
+# the output table read back: extract_transcripts' columns, then the pk
+# partition column typed int, as partition discovery infers it; declared,
+# so an output that holds no bucket yet reads as zero rows
+OUTPUT_SCHEMA = T.StructType(
+    EXTRACTED_SCHEMA.fields + [T.StructField("pk", T.IntegerType())])
 
 
 def with_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
@@ -96,6 +103,15 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame, out_dir: str,
     if fail_after_buckets is not None:
         todo_pks = todo_pks[:fail_after_buckets]
         src = src.filter(F.col("pk").isin(todo_pks))
+    # this run-id's buckets: those it committed before (a resumed run-id)
+    # plus the ones committed below
+    processed = {r.pk for r in done if r.run_id == run_id} | set(todo_pks)
+    counters = {"processed_buckets": len(processed),
+                "skipped_buckets": len(done_pks)}
+    if done_pks and not todo_pks:
+        # a full resume: nothing to extract, write or checksum; a fresh
+        # run over an empty input still writes its (empty) output below
+        return counters
     extracted = extract_transcripts(
         src.drop("pk"), page_numbers=page_numbers,
         detect_vertical=detect_vertical, salt=salt,
@@ -111,16 +127,13 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame, out_dir: str,
     # lineage from the just-written buckets, read back so the checksum
     # reflects exactly what was committed; the isin on the partition
     # column prunes the scan to this run's pk= directories only
-    this_run = (spark.read.parquet(output_path)
+    this_run = (read_extracted(spark, out_dir)
                 .filter(F.col("pk").isin(todo_pks)))
     lineage = lineage_of(this_run, run_id)
     lineage.write.mode("append").parquet(lineage_path)
-    # this run-id's buckets: those it committed before (a resumed run-id)
-    # plus the ones just committed
-    processed = {r.pk for r in done if r.run_id == run_id} | set(todo_pks)
-    return {"processed_buckets": len(processed),
-            "skipped_buckets": len(done_pks)}
+    return counters
 
 
 def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(out_dir, "extracted"))
+    return spark.read.schema(OUTPUT_SCHEMA).parquet(
+        os.path.join(out_dir, "extracted"))

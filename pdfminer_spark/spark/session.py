@@ -16,15 +16,20 @@ job runs the same recipe as everything that measures it. Rationale
 takes from its command line or cluster instead: master, app name, shuffle
 partitions sized for local runs, driver memory, UI off, the workers'
 ``PYTHONPATH`` and the worker daemon
-``python.daemon.module = pdfminer_spark.spark.daemon``. Before every task a
-stock worker invalidates the import caches, which on CPython < 3.13
-re-reads the whole directory of pyspark.zip once per pyspark package
-imported from it (16 re-reads, ~0.7 s per task measured on 4 cores); this
-daemon re-reads an archive only when its size or mtime changed. It is a
-launch setting because the daemon module must import before any task
-runs: under ``spark-submit --py-files`` the package zip is not yet on a
-worker's path then, and the job fails with "No module named
-'pdfminer_spark'".
+``python.daemon.module = pdfminer_spark.spark.daemon``. The stock daemon
+imports pyspark and py4j from Spark's source zips, which hold no bytecode,
+so each new daemon compiles them (1.77-1.84 s per task's worker start,
+against 0.48-0.55 s with this daemon, in perfbench's warm-up job on a
+4-core VM); this
+daemon imports an installed, byte-compiled copy of the same release
+instead when the path holds one. Before every task a stock worker also
+invalidates the import caches, which on CPython < 3.13 re-reads the whole
+directory of pyspark.zip once per pyspark package imported from it (16
+re-reads, ~0.7 s per task measured on 4 cores); this daemon re-reads an
+archive only when its size or mtime changed. It is a launch setting
+because the daemon module must import before any task runs: under
+``spark-submit --py-files`` the package zip is not yet on a worker's path
+then, and the job fails with "No module named 'pdfminer_spark'".
 """
 from __future__ import annotations
 
