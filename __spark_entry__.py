@@ -124,8 +124,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # this round and (b) the ops with the OLDEST driver rows. For r7:
     # the 11 ops whose last driver row is r4, the 13 whose last row is
     # r5, then the r7-touched ops (lm_perplexity cutoff swap,
-    # ann_lsh_pairs sig_mat kwarg, and the extraction family behind the
-    # interp/layout/pipeline truncation-flag change).
+    # ann_lsh_pairs sig_mat kwarg, since removed, and the extraction
+    # family behind the interp/layout/pipeline truncation-flag change).
     priority = [
         # FINAL r7 window (50 seats, driver samples first 50):
         # 12 r4-stale (r6 verdict task #4) + 8 behavior-changed

@@ -31,6 +31,8 @@ import zlib
 
 import numpy as np
 
+from pdfminer_spark.pdf.filters import FilterError, lzwdecode, png_unfilter
+
 
 class ImageDecodeError(ValueError):
     """Malformed or unsupported (but correctly sniffed) image payload."""
@@ -55,48 +57,12 @@ _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
 def _png_unfilter(raw: np.ndarray, height: int, stride: int,
                   fpp: int) -> np.ndarray:
-    """Undo per-scanline filtering (spec §6): each row starts with a
-    filter-type byte; Sub/Average/Paeth carry a left-pixel dependency, so
-    those rows walk bytewise (ints, not numpy scalars — ~8x faster for
-    the sequential part); None/Up rows stay vectorized."""
-    rows = raw.reshape(height, stride + 1)
-    out = np.zeros((height, stride), dtype=np.uint8)
-    for y in range(height):
-        ftype = rows[y, 0]
-        cur = rows[y, 1:]
-        if ftype == 0:  # None
-            out[y] = cur
-            continue
-        if ftype == 2:  # Up
-            out[y] = cur + (out[y - 1] if y else 0)
-            continue
-        line = cur.tolist()
-        prev = out[y - 1].tolist() if y else [0] * stride
-        if ftype == 1:  # Sub
-            for i in range(fpp, stride):
-                line[i] = (line[i] + line[i - fpp]) & 0xFF
-        elif ftype == 3:  # Average
-            for i in range(stride):
-                left = line[i - fpp] if i >= fpp else 0
-                line[i] = (line[i] + ((left + prev[i]) >> 1)) & 0xFF
-        elif ftype == 4:  # Paeth
-            for i in range(stride):
-                a = line[i - fpp] if i >= fpp else 0
-                b = prev[i]
-                c = prev[i - fpp] if i >= fpp else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                if pa <= pb and pa <= pc:
-                    pr = a
-                elif pb <= pc:
-                    pr = b
-                else:
-                    pr = c
-                line[i] = (line[i] + pr) & 0xFF
-        else:
-            raise ImageDecodeError("PNG: unknown filter type %d" % ftype)
-        out[y] = line
-    return out
+    """Undo per-scanline filtering (spec §6) with the PDF filters' row
+    un-filter; an unknown filter type is an ImageDecodeError."""
+    try:
+        return png_unfilter(raw.reshape(height, stride + 1), fpp)
+    except FilterError as e:
+        raise ImageDecodeError(str(e)) from None
 
 
 def decode_png(b: bytes) -> dict:
@@ -1006,8 +972,6 @@ def decode_tiff(b: bytes) -> dict:
     if len(offsets) != n_strips:
         raise ImageDecodeError("TIFF strip count %d != expected %d"
                                % (len(offsets), n_strips))
-
-    from pdfminer_spark.pdf.filters import lzwdecode
 
     parts = []
     for (i, (off, cnt)) in enumerate(zip(offsets, counts)):

@@ -50,21 +50,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _materialize(df: DataFrame, variant: str = "checkpoint") -> DataFrame:
-    """Eagerly materialize an intermediate frame reused by several plan
-    branches. Default is eager localCheckpoint (blocks freed by the
-    ContextCleaner when the frame is unreferenced); the "cache" variant
-    exists only for the perf A/B harness (tools/ab_ann.py), which passes
-    it EXPLICITLY per call — a mutable module global here once meant an
-    exception mid-A/B could leave the cache variant active process-wide
-    (ADVICE r6)."""
-    if variant == "cache":
-        df = df.cache()
-        df.count()
-        return df
-    return df.localCheckpoint(eager=True)
-
-
 def _emb(spark: SparkSession, sf_dir: str,
          parallel: bool = False) -> DataFrame:
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -390,8 +375,7 @@ def ann_lsh_buckets(spark: SparkSession, sf_dir: str,
 
 def ann_lsh_pairs(spark: SparkSession, sf_dir: str,
                   tables: int = _LSH_TABLES,
-                  bits: int = _LSH_BITS,
-                  sig_mat: str = "checkpoint") -> DataFrame:
+                  bits: int = _LSH_BITS) -> DataFrame:
     """Candidate PAIRS from banded sign-LSH with the exact cosine.
 
     The 100 TB ANN join shape: per-(table, bucket) self-join emits only
@@ -414,10 +398,10 @@ def ann_lsh_pairs(spark: SparkSession, sf_dir: str,
     # Eager localCheckpoint, not cache(): materialized for the caller's
     # action but not pinned in the CacheManager afterwards — the
     # ContextCleaner frees the blocks once the frame is unreferenced
-    # (r4 verdict #7 unpersist audit). tools/ab_ann.py passes
-    # sig_mat="cache" for the interleaved A/B that cleared this choice
-    # of any bench-regression blame (BASELINE.md round-6 notes).
-    sigs = _materialize(_lsh_sigs(spark, sf_dir, tables, bits), sig_mat)
+    # (r4 verdict #7 unpersist audit). An interleaved A/B against cache()
+    # cleared this choice of any bench-regression blame (BASELINE.md
+    # round-6 notes, BENCH_ab_ann_r6.json).
+    sigs = _lsh_sigs(spark, sf_dir, tables, bits).localCheckpoint(eager=True)
     a = sigs.select(F.col("vec_id").alias("id_a"), "tbl", "bucket")
     b = sigs.select(F.col("vec_id").alias("id_b"), "tbl", "bucket")
     cand = (

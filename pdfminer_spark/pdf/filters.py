@@ -168,53 +168,46 @@ def lzwdecode(data: bytes) -> bytes:
     return b"".join(out)
 
 
-def apply_png_predictor(pred: int, colors: int, columns: int,
-                        bitspercomponent: int, data: bytes) -> bytes:
-    """Un-apply PNG row predictors (used by xref streams).
+def png_unfilter(mat: np.ndarray, bpp: int) -> np.ndarray:
+    """Undo PNG per-row filtering (RFC 2083 §6) on a (nrows, 1 + rowlen)
+    uint8 matrix whose first column is each row's filter type; returns
+    the (nrows, rowlen) uint8 rows. ``bpp`` is the filter unit in bytes.
 
-    Vectorized: rows land in a (nrows, rowlen) uint8 matrix; Up is one
-    cumulative-sum pass; Sub/Average/Paeth fall back to tight loops only
-    for the affected rows (rare in practice — xref streams use Up).
+    All-Up input (the common xref-stream case) is one cumulative-sum
+    pass, wrapping in uint8; otherwise None/Up rows stay vectorized and
+    Sub/Average/Paeth rows, which carry a left-pixel dependency, walk
+    bytewise over Python ints (~8x faster than numpy scalars for the
+    sequential part). PNG images (ops/imagedec.py) share this code.
     """
-    if bitspercomponent != 8:
-        raise FilterError("unsupported BitsPerComponent: %d" % bitspercomponent)
-    rowlen = colors * columns
-    stride = rowlen + 1
-    nrows = len(data) // stride
-    if nrows == 0:
-        return b""
-    mat = np.frombuffer(data[: nrows * stride], dtype=np.uint8).reshape(nrows, stride)
     ftypes = mat[:, 0]
-    rows = mat[:, 1:].astype(np.int64)
-    bpp = colors  # bytes per pixel at 8 bits/component
-    if np.all(ftypes == 2):  # PNG Up — the common xref-stream case
-        out = np.cumsum(rows, axis=0, dtype=np.int64) & 0xFF
-        return out.astype(np.uint8).tobytes()
-    out = np.zeros_like(rows)
-    prior = np.zeros(rowlen, dtype=np.int64)
-    for r in range(nrows):
-        ft = ftypes[r]
-        line = rows[r]
-        if ft == 0:
-            cur = line & 0xFF
-        elif ft == 1:
-            cur = line.copy()
+    rows = mat[:, 1:]
+    if np.all(ftypes == 2):
+        return np.cumsum(rows, axis=0, dtype=np.uint8)
+    (nrows, rowlen) = rows.shape
+    out = np.zeros((nrows, rowlen), dtype=np.uint8)
+    for y in range(nrows):
+        ftype = ftypes[y]
+        cur = rows[y]
+        if ftype == 0:  # None
+            out[y] = cur
+            continue
+        if ftype == 2:  # Up
+            out[y] = cur + (out[y - 1] if y else 0)
+            continue
+        line = cur.tolist()
+        prev = out[y - 1].tolist() if y else [0] * rowlen
+        if ftype == 1:  # Sub
             for i in range(bpp, rowlen):
-                cur[i] = (cur[i] + cur[i - bpp]) & 0xFF
-            cur &= 0xFF
-        elif ft == 2:
-            cur = (line + prior) & 0xFF
-        elif ft == 3:
-            cur = line.copy()
+                line[i] = (line[i] + line[i - bpp]) & 0xFF
+        elif ftype == 3:  # Average
             for i in range(rowlen):
-                left = cur[i - bpp] if i >= bpp else 0
-                cur[i] = (cur[i] + (left + prior[i]) // 2) & 0xFF
-        elif ft == 4:
-            cur = line.copy()
+                left = line[i - bpp] if i >= bpp else 0
+                line[i] = (line[i] + ((left + prev[i]) >> 1)) & 0xFF
+        elif ftype == 4:  # Paeth
             for i in range(rowlen):
-                a = cur[i - bpp] if i >= bpp else 0
-                b = prior[i]
-                c = prior[i - bpp] if i >= bpp else 0
+                a = line[i - bpp] if i >= bpp else 0
+                b = prev[i]
+                c = prev[i - bpp] if i >= bpp else 0
                 p = a + b - c
                 pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
                 if pa <= pb and pa <= pc:
@@ -223,12 +216,24 @@ def apply_png_predictor(pred: int, colors: int, columns: int,
                     pr = b
                 else:
                     pr = c
-                cur[i] = (cur[i] + pr) & 0xFF
+                line[i] = (line[i] + pr) & 0xFF
         else:
-            raise FilterError("unsupported predictor row type: %d" % ft)
-        out[r] = cur
-        prior = cur
-    return out.astype(np.uint8).tobytes()
+            raise FilterError("unsupported PNG row filter type: %d" % ftype)
+        out[y] = line
+    return out
+
+
+def apply_png_predictor(pred: int, colors: int, columns: int,
+                        bitspercomponent: int, data: bytes) -> bytes:
+    """Un-apply PNG row predictors (used by xref streams); a trailing
+    partial row is dropped."""
+    if bitspercomponent != 8:
+        raise FilterError("unsupported BitsPerComponent: %d" % bitspercomponent)
+    stride = colors * columns + 1
+    nrows = len(data) // stride
+    mat = np.frombuffer(data, dtype=np.uint8, count=nrows * stride)
+    # 8 bits/component: the filter unit is one byte per color
+    return png_unfilter(mat.reshape(nrows, stride), colors).tobytes()
 
 
 _FLATE = {"FlateDecode", "Fl"}

@@ -50,11 +50,6 @@ EXTRACTED_WITH_BOXES_SCHEMA = T.StructType(
     EXTRACTED_SCHEMA.fields + [T.StructField("boxes", T.ArrayType(BOX_STRUCT))]
 )
 
-EXTRACTED_SCHEMA_DDL = (
-    "conv_id string, turn_idx int, role string, tool string, text string, "
-    "n_pages int, n_boxes int, bytes_decoded long, status string"
-)
-
 
 def extract_one(text: str, tool: str, page_numbers=None,
                 detect_vertical: bool = True, with_boxes: bool = False,

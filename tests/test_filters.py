@@ -1,7 +1,10 @@
 """Codec conformance — vectors from the reference's doctests
 (/root/reference/pdfminer/{ascii85,lzw,runlength}.py)."""
+import numpy as np
+
 from pdfminer_spark.pdf.filters import (apply_png_predictor, ascii85decode,
-                                        asciihexdecode, lzwdecode, rldecode)
+                                        asciihexdecode, lzwdecode,
+                                        png_unfilter, rldecode)
 
 
 def test_ascii85():
@@ -35,3 +38,12 @@ def test_png_none_and_sub():
     out = apply_png_predictor(11, 1, 4, 8, raw)
     assert out[:4] == bytes([5, 6, 7, 8])
     assert out[4:] == bytes([1, 2, 3, 4])
+
+
+def test_png_all_up_fast_path_matches_the_row_loop():
+    # all-Up rows take one uint8-wrapping cumulative sum; one trailing
+    # None row sends the same rows through the per-row loop instead
+    mat = np.random.RandomState(0).randint(0, 256, (64, 22)).astype(np.uint8)
+    mat[:, 0] = 2
+    looped = png_unfilter(np.vstack([mat, np.zeros((1, 22), np.uint8)]), 3)
+    assert (png_unfilter(mat, 3) == looped[:-1]).all()
