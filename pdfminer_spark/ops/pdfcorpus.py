@@ -25,7 +25,6 @@ samples/ regression set (pdf2txt.py -p1 -V outputs).
 """
 from __future__ import annotations
 
-import datetime
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -50,27 +49,11 @@ def _corpus_order():
 
 def _pdf_docs(spark: SparkSession) -> DataFrame:
     """(doc_id, name, text): REAL extraction over the vendored PDFs."""
-    import pandas as pd
-
-    from ..spark.fixtures import TRANSCRIPTS_SCHEMA, _load_payloads
+    from ..spark.fixtures import corpus_transcripts
     from ..spark.pipeline import extract_transcripts
 
     order = _corpus_order()
-    payloads = dict(_load_payloads())
-    t0 = datetime.datetime(2026, 1, 1)
-    # pandas input -> Arrow createDataFrame: the ~4 MB of base64
-    # payload rows cost ~0.4 s through the pickled-tuples path per
-    # evaluation, single-digit ms as Arrow batches (r8; the session
-    # already enables arrow.pyspark)
-    pdf = pd.DataFrame({
-        "conv_id": order,
-        "turn_idx": pd.Series([0] * len(order), dtype="int32"),
-        "role": "tool",
-        "text": [payloads[name] for name in order],
-        "tool": "pdf",
-        "ts": pd.Series([t0] * len(order), dtype="datetime64[us]"),
-    })
-    tr = spark.createDataFrame(pdf, TRANSCRIPTS_SCHEMA)
+    tr = corpus_transcripts(spark)
     # 10 one-page docs: cap the fan-out (32 default shuffle partitions
     # would run a python task per mostly-empty partition, and each task
     # pays a fixed set-up cost in its reused worker) and

@@ -25,7 +25,13 @@ def map_rows(df: DataFrame,
     sequence per ``ddl`` column, all of one length. A 1→1 operator
     returns one-element sequences; zero-length output drops the row and
     longer output flat-maps it. ``ddl`` is a flat ``name type, ...``
-    list: no column type may contain a comma.
+    list: no column type may contain a comma."""
+    return df.mapInPandas(row_batches(per_row, ddl), ddl)
+
+
+def row_batches(per_row: Callable[..., Sequence[Sequence]], ddl: str):
+    """``map_rows``' ``mapInPandas`` batch function, for callers that wrap
+    it (``tools/capacity.py extract`` adds per-partition telemetry).
 
     Output stays columnar end to end: per-row tuples and their
     transposition cost more than the work itself for the many-row
@@ -49,4 +55,4 @@ def map_rows(df: DataFrame,
                        else pd.Series(c, dtype="object"))
                 for ((name, t), c) in zip(fields, cols)})
 
-    return df.mapInPandas(fn, ddl)
+    return fn

@@ -134,6 +134,26 @@ def build_transcripts(spark: SparkSession, n_convs: int = 20, seed: int = 42,
     return df
 
 
+def corpus_transcripts(spark: SparkSession) -> DataFrame:
+    """One PDF turn per vendored sample, conv_id = sample name. The frame
+    enters as one pandas frame over the session's Arrow path: the ~4 MB
+    of base64 payload rows cost ~0.4 s per evaluation through the
+    pickled-tuples ``createDataFrame``, single-digit ms as Arrow batches."""
+    import pandas as pd
+
+    payloads = _load_payloads()
+    pdf = pd.DataFrame({
+        "conv_id": [name for (name, _b64) in payloads],
+        "turn_idx": pd.Series([0] * len(payloads), dtype="int32"),
+        "role": "tool",
+        "text": [b64 for (_name, b64) in payloads],
+        "tool": "pdf",
+        "ts": pd.Series([datetime.datetime(2026, 1, 1)] * len(payloads),
+                        dtype="datetime64[us]"),
+    })
+    return spark.createDataFrame(pdf, TRANSCRIPTS_SCHEMA)
+
+
 def build_transcripts_scaled(spark: SparkSession, n_turns: int,
                              n_convs: int | None = None,
                              giant_frac: float = 0.2,

@@ -27,17 +27,15 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from .pipeline import EXTRACTED_SCHEMA, extract_transcripts
+from .pipeline import EXTRACTED_DDL, extract_transcripts
 
 LINEAGE_COLS = ["run_id", "pk", "conv_id_min", "conv_id_max", "turn_count",
                 "bytes_decoded", "checksum", "ts"]
 # the output table read back: extract_transcripts' columns, then the pk
 # partition column typed int, as partition discovery infers it; declared,
 # so an output that holds no bucket yet reads as zero rows
-OUTPUT_SCHEMA = T.StructType(
-    EXTRACTED_SCHEMA.fields + [T.StructField("pk", T.IntegerType())])
+OUTPUT_SCHEMA = EXTRACTED_DDL + ", pk int"
 
 
 def with_bucket(df: DataFrame, num_buckets: int) -> DataFrame:

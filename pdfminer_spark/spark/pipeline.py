@@ -4,7 +4,8 @@ Stage plan (SURVEY.md §3.1 "Spark lifecycle"):
 
   scan -> salted repartition on conv_id  [shuffle #1, skew defuse]
        -> try_to_binary(text, 'base64')  [PDF payloads, stage-parallel]
-       -> mapInPandas(extract)           [the only JVM<->Python crossing]
+       -> map_rows(extract_one)          [the only JVM<->Python crossing,
+                                          one Arrow-batched mapInPandas]
        -> window over (conv_id, turn_idx) for stable turn ordering
           (applied by assemble_conversations / validate joins)
 
@@ -16,44 +17,22 @@ kill a 10^12-turn job).
 from __future__ import annotations
 
 import base64
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-EXTRACTED_SCHEMA = T.StructType([
-    T.StructField("conv_id", T.StringType()),
-    T.StructField("turn_idx", T.IntegerType()),
-    T.StructField("role", T.StringType()),
-    T.StructField("tool", T.StringType()),
-    T.StructField("text", T.StringType()),
-    T.StructField("n_pages", T.IntegerType()),
-    T.StructField("n_boxes", T.IntegerType()),
-    T.StructField("bytes_decoded", T.LongType()),
-    T.StructField("status", T.StringType()),
-])
+from .batches import map_rows
 
-BOX_STRUCT = T.StructType([
-    T.StructField("box_id", T.IntegerType()),
-    T.StructField("page", T.IntegerType()),
-    T.StructField("x0", T.DoubleType()),
-    T.StructField("y0", T.DoubleType()),
-    T.StructField("x1", T.DoubleType()),
-    T.StructField("y1", T.DoubleType()),
-    T.StructField("wmode", T.StringType()),
-    T.StructField("text", T.StringType()),
-])
-
-EXTRACTED_WITH_BOXES_SCHEMA = T.StructType(
-    EXTRACTED_SCHEMA.fields + [T.StructField("boxes", T.ArrayType(BOX_STRUCT))]
-)
+# the extracted frame's columns, declared once: the extraction stage's
+# output and, with ``pk``, lineage's read-back schema
+EXTRACTED_DDL = ("conv_id string, turn_idx int, role string, tool string, "
+                 "text string, n_pages int, n_boxes int, bytes_decoded long, "
+                 "status string")
 
 
 def extract_one(text: str, tool: str, page_numbers=None,
                 detect_vertical: bool = True, with_boxes: bool = False,
-                pdf_bytes: bytes | None = None, fmt: str = "text"):
+                pdf_bytes: bytes | None = None):
     """Extract one turn payload -> (text, n_pages, n_boxes, bytes, status
     [, boxes]). ``boxes`` rows are (box_id, page, x0, y0, x1, y1, wmode,
     text) in reading order — the span unit of the XML goldens.
@@ -64,7 +43,7 @@ def extract_one(text: str, tool: str, page_numbers=None,
 
     Importable without pyspark (reused by tests and the DuckDB oracle)."""
     from pdfminer_spark.html.boilerplate import extract_main_text
-    from pdfminer_spark.pdf.extract import extract_pages, render_text
+    from pdfminer_spark.pdf.extract import extract_pages, extract_text
     from pdfminer_spark.pdf.layout import LAParams, TextBox, TextBoxV
 
     boxes: list[tuple] = []
@@ -73,8 +52,7 @@ def extract_one(text: str, tool: str, page_numbers=None,
             data = pdf_bytes if pdf_bytes is not None else base64.b64decode(text)
             la = LAParams(detect_vertical=detect_vertical)
             pages = extract_pages(data, page_numbers=page_numbers,
-                                  laparams=la,
-                                  collect_shapes=(fmt != "text"))
+                                  laparams=la, collect_shapes=False)
             n_boxes = 0
             for (pageno, page) in enumerate(pages):
                 for o in page.objs:
@@ -85,26 +63,13 @@ def extract_one(text: str, tool: str, page_numbers=None,
                                 o.index, pageno, o.x0, o.y0, o.x1, o.y1,
                                 "tb-rl" if isinstance(o, TextBoxV) else "lr-tb",
                                 o.get_text()))
-            if fmt == "xml":
-                from pdfminer_spark.pdf.xmlout import pages_to_xml
-
-                rendered = pages_to_xml(pages)
-            elif fmt == "html":
-                from pdfminer_spark.pdf.htmlout import pages_to_html
-
-                rendered = pages_to_html(pages)
-            else:
-                out: list[str] = []
-                for page in pages:
-                    render_text(page, out)
-                    out.append("\f")
-                rendered = "".join(out)
             # deep-nesting truncation is observable, not silent (ADVICE
             # r6): a doc whose Form XObject nesting hit the interpreter's
             # 64-deep cap still extracts, flagged 'ok:truncated-forms'
             truncated = sum(getattr(p, "truncated_forms", 0) for p in pages)
             status = "ok:truncated-forms" if truncated else "ok"
-            result = (rendered, len(pages), n_boxes, len(data), status)
+            result = (extract_text(data, pages=pages), len(pages), n_boxes,
+                      len(data), status)
         elif tool == "html":
             main = extract_main_text(text)
             result = (main, 0, 0, len(text.encode("utf-8")), "ok")
@@ -116,33 +81,15 @@ def extract_one(text: str, tool: str, page_numbers=None,
     return result + (boxes,) if with_boxes else result
 
 
-def _extract_map_batches(page_numbers, detect_vertical, with_boxes=False,
-                         fmt="text"):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf["_pdf"] if "_pdf" in pdf.columns else [None] * len(pdf)
-            results = [
-                extract_one(text, tool, page_numbers, detect_vertical,
-                            with_boxes,
-                            bytes(pb) if pb is not None else None, fmt)
-                for (text, tool, pb) in zip(pdf["text"], pdf["tool"], payloads)
-            ]
-            cols = {
-                "conv_id": pdf["conv_id"],
-                "turn_idx": pdf["turn_idx"],
-                "role": pdf["role"],
-                "tool": pdf["tool"],
-                "text": [r[0] for r in results],
-                "n_pages": pd.Series([r[1] for r in results], dtype="int32"),
-                "n_boxes": pd.Series([r[2] for r in results], dtype="int32"),
-                "bytes_decoded": pd.Series([r[3] for r in results], dtype="int64"),
-                "status": [r[4] for r in results],
-            }
-            if with_boxes:
-                cols["boxes"] = [r[5] for r in results]
-            yield pd.DataFrame(cols)
+def _extract_row(page_numbers, detect_vertical):
+    """The extraction stage's per-row function over ``_extraction_input``'s
+    columns: one ``EXTRACTED_DDL`` row."""
+    def per_row(conv_id, turn_idx, role, tool, text, pdf):
+        out = extract_one(text, tool, page_numbers, detect_vertical,
+                          pdf_bytes=None if pdf is None else bytes(pdf))
+        return [(v,) for v in (conv_id, turn_idx, role, tool) + out]
 
-    return fn
+    return per_row
 
 
 def salted_repartition(df: DataFrame, num_partitions: int | None = None,
@@ -167,35 +114,31 @@ def _extraction_input(df: DataFrame, num_partitions: int | None = None,
     ``_pdf`` (``text`` blanked) at the stage's parallelism, not the
     scan's: the shuffle carries text, the Arrow crossing binary. Payloads
     the decoder rejects get NULL, not a task failure under ANSI, and keep
-    their text for ``extract_one``'s Python decode (status column)."""
+    their text for ``extract_one``'s Python decode (status column). Only
+    the columns the stage reads cross into Python."""
     src = salted_repartition(df, num_partitions, salt) if repartition else df
-    pdf = F.try_to_binary(F.col("text"), F.lit("base64"))
-    return src.withColumn(
-        "_pdf", F.when(F.col("tool") == "pdf", pdf)
-    ).withColumn(
-        "text", F.when(F.col("_pdf").isNotNull(), F.lit("")).otherwise(
-            F.col("text")))
+    pdf = F.when(F.col("tool") == "pdf",
+                 F.try_to_binary(F.col("text"), F.lit("base64")))
+    return src.withColumn("_pdf", pdf).select(
+        "conv_id", "turn_idx", "role", "tool",
+        F.when(F.col("_pdf").isNotNull(), F.lit("")).otherwise(
+            F.col("text")).alias("text"),
+        "_pdf")
 
 
 def extract_transcripts(df: DataFrame, page_numbers=None,
                         detect_vertical: bool = True,
                         num_partitions: int | None = None,
                         salt: int = 16,
-                        repartition: bool = True,
-                        with_boxes: bool = False,
-                        fmt: str = "text") -> DataFrame:
-    """transcripts -> extracted. One mapInPandas stage, Arrow-batched.
-    ``with_boxes`` adds the layout-span array column (SURVEY.md §1.3);
-    ``fmt`` selects the rendered text column: 'text' | 'xml' | 'html'
-    (the reference's -t output modes, golden-identical).
+                        repartition: bool = True) -> DataFrame:
+    """transcripts -> extracted (``EXTRACTED_DDL``). One Arrow-batched
+    ``map_rows`` stage.
 
     PDF payloads are base64-decoded JVM-side *after* the salted shuffle,
     inside the extraction stage's tasks (``_extraction_input``)."""
-    src = _extraction_input(df, num_partitions, salt, repartition)
-    return src.mapInPandas(
-        _extract_map_batches(page_numbers, detect_vertical, with_boxes, fmt),
-        schema=EXTRACTED_WITH_BOXES_SCHEMA if with_boxes else EXTRACTED_SCHEMA,
-    )
+    return map_rows(_extraction_input(df, num_partitions, salt, repartition),
+                    _extract_row(page_numbers, detect_vertical),
+                    EXTRACTED_DDL)
 
 
 def with_turn_order(extracted: DataFrame) -> DataFrame:

@@ -18,6 +18,23 @@ from .fixtures import TRANSCRIPTS_SCHEMA
 from .pipeline import extract_transcripts
 
 
+def _parquet_sink(df: DataFrame, output_path: str, checkpoint_path: str,
+                  available_now: bool):
+    """Start ``df``'s append-mode parquet sink, exactly-once via the
+    checkpoint; ``available_now`` drains the input present now and stops.
+    Returns the StreamingQuery."""
+    writer = (
+        df.writeStream
+        .format("parquet")
+        .option("path", output_path)
+        .option("checkpointLocation", checkpoint_path)
+        .outputMode("append")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def read_transcript_stream(spark: SparkSession, input_path: str,
                            max_files_per_trigger: int = 16) -> DataFrame:
     return (
@@ -35,16 +52,8 @@ def extraction_query(spark: SparkSession, input_path: str, output_path: str,
     stream = read_transcript_stream(spark, input_path)
     extracted = extract_transcripts(stream, page_numbers=page_numbers,
                                     repartition=False)
-    writer = (
-        extracted.writeStream
-        .format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _parquet_sink(extracted, output_path, checkpoint_path,
+                         available_now)
 
 
 def turn_rate_query(spark: SparkSession, input_path: str, output_path: str,
@@ -64,16 +73,7 @@ def turn_rate_query(spark: SparkSession, input_path: str, output_path: str,
             "conv_id", "n_turns",
         )
     )
-    writer = (
-        agg.writeStream
-        .format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _parquet_sink(agg, output_path, checkpoint_path, available_now)
 
 
 def dedup_stream(spark: SparkSession, input_path: str, output_path: str,
@@ -92,16 +92,7 @@ def dedup_stream(spark: SparkSession, input_path: str, output_path: str,
     )
     deduped = (hashed.withWatermark("ts", watermark)
                .dropDuplicatesWithinWatermark(["content_hash"]))
-    writer = (
-        deduped.writeStream
-        .format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _parquet_sink(deduped, output_path, checkpoint_path, available_now)
 
 
 def conversation_progress_query(spark: SparkSession, input_path: str,
@@ -138,16 +129,8 @@ def conversation_progress_query(spark: SparkSession, input_path: str,
         .applyInPandasWithState(update, out_schema, state_schema,
                                 "append", GroupStateTimeout.NoTimeout)
     )
-    writer = (
-        progressed.writeStream
-        .format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _parquet_sink(progressed, output_path, checkpoint_path,
+                         available_now)
 
 
 def turn_merge_query(spark: SparkSession, input_path: str,
@@ -200,13 +183,4 @@ def turn_merge_query(spark: SparkSession, input_path: str,
         .applyInPandasWithState(update, out_schema, state_schema,
                                 "append", GroupStateTimeout.NoTimeout)
     )
-    writer = (
-        merged.writeStream
-        .format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _parquet_sink(merged, output_path, checkpoint_path, available_now)

@@ -54,6 +54,23 @@ def test_ops_family_rows(spark, tmp_path):
                for r in recs)
 
 
+def test_extract_family_telemetry(spark):
+    """The extract family wraps the production batch function: every turn
+    comes out, and no Arrow batch exceeds the session's bound."""
+    from pyspark import cloudpickle
+
+    # the telemetry wrapper lives in this tool, which the Python workers
+    # cannot import: ship it by value, as running the tool as a script does
+    cloudpickle.register_pickle_by_value(capacity)
+    try:
+        (rec,) = capacity.extract(spark, [40])
+    finally:
+        cloudpickle.unregister_pickle_by_value(capacity)
+    assert rec["rows_out"] == rec["n_turns"] == 40
+    assert rec["partitions"] > 0
+    assert rec["max_batch_rows"] <= rec["arrow_batch_bound"]
+
+
 def test_a_warm_pass_runs_the_action_once_untimed():
     calls = []
     assert capacity._timed(lambda: calls.append(1) or len(calls),

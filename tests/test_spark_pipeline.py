@@ -4,6 +4,7 @@ Correctness oracle: the vendored goldens (FIXTURES.md §3) joined per
 (conv_id, turn_idx)."""
 import base64
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,7 +12,8 @@ from pyspark.sql import functions as F
 from conftest import golden_text, payload
 from pdfminer_spark.spark.fixtures import build_expected, build_transcripts
 from pdfminer_spark.spark.lineage import read_extracted, run_extraction
-from pdfminer_spark.spark.pipeline import (assemble_conversations,
+from pdfminer_spark.spark.pipeline import (EXTRACTED_DDL,
+                                           assemble_conversations,
                                            extract_transcripts,
                                            with_turn_order)
 
@@ -147,8 +149,8 @@ def test_pdf_decode_parity(spark):
 
     texts = [t for (t, _) in DECODE_CASES]
     df = spark.createDataFrame(
-        [(i, t, "pdf") for (i, t) in enumerate(texts)],
-        "turn_idx int, text string, tool string")
+        [("c1", i, "tool", t, "pdf") for (i, t) in enumerate(texts)],
+        "conv_id string, turn_idx int, role string, text string, tool string")
     got = {}
     for r in _extraction_input(df, repartition=False).collect():
         if r._pdf is not None:
@@ -175,6 +177,35 @@ def test_pdf_decode_runs_after_the_shuffle(spark):
     assert plan.index("unbase64") < plan.index("Exchange"), plan
     assert plan.count("unbase64") == 1, plan
     assert "rlike" not in plan.lower(), plan
+
+
+def _map_in_pandas_inputs(df):
+    """The input columns of each MapInPandas in ``df``'s executed plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [re.sub(r"#\d+", "", args).split(", ")
+            for args in re.findall(r"MapInPandas \w+\(([^)]*)\)", plan)]
+
+
+def test_extraction_stage_reads_only_the_columns_it_uses(spark):
+    """The extraction stage's Python input is the six columns the
+    per-row function reads; ``ts`` stays in the JVM."""
+    df = build_transcripts(spark, n_convs=2)
+    assert _map_in_pandas_inputs(extract_transcripts(df)) == [
+        ["conv_id", "turn_idx", "role", "tool", "text", "_pdf"]]
+
+
+def test_empty_transcripts_extract_to_the_declared_schema(spark):
+    from pdfminer_spark.spark.fixtures import TRANSCRIPTS_SCHEMA
+
+    out = extract_transcripts(spark.createDataFrame([], TRANSCRIPTS_SCHEMA))
+    assert out.collect() == []
+    assert out.schema == spark.createDataFrame([], EXTRACTED_DDL).schema
+
+
+def test_layout_boxes_is_one_python_stage(spark):
+    from pdfminer_spark.ops.layoutops import layout_boxes
+
+    assert len(_map_in_pandas_inputs(layout_boxes(spark, None))) == 1
 
 
 def test_lineage_resume(spark, tmp_path):

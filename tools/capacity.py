@@ -235,8 +235,9 @@ def _telemetry_fn(inner):
 
 
 def extract(spark, sizes):
+    from pdfminer_spark.spark.batches import row_batches
     from pdfminer_spark.spark.fixtures import build_transcripts_scaled
-    from pdfminer_spark.spark.pipeline import (_extract_map_batches,
+    from pdfminer_spark.spark.pipeline import (EXTRACTED_DDL, _extract_row,
                                                _extraction_input,
                                                extract_transcripts,
                                                with_turn_order)
@@ -255,7 +256,8 @@ def extract(spark, sizes):
         parts = [r.asDict() for r in (
             _extraction_input(df, salt=4)
             .mapInPandas(
-                _telemetry_fn(_extract_map_batches([0], True)),
+                _telemetry_fn(row_batches(_extract_row([0], True),
+                                          EXTRACTED_DDL)),
                 schema=("pid int, rows long, batches long, "
                         "max_batch_rows long, vm_hwm_kb long, "
                         "vm_rss_kb long"))
